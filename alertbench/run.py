@@ -16,8 +16,8 @@ Extra modes:
                      each metric's median, quartiles and spread against its
                      bound in BENCHMARK.json, plus the warm-up drift check
     --tiny 1         tiny sizes (smoke test)
-    --corrupt 1      drop one delivered point before checking (self-test:
-                     the run must report a failed operation)
+    --corrupt 1      falsify one output per output check before checking
+                     (self-test: every check must report a violation)
 """
 import argparse
 import hashlib
@@ -83,8 +83,12 @@ def build():
            f"-Dsbt.global.base={os.path.join(BUILD, 'sbt-global')}",
            "-Dsbt.server.autostart=false",
            f"-Djava.io.tmpdir={os.path.join(BUILD, 'tmp')}",
+           f"-Djna.tmpdir={os.path.join(BUILD, 'tmp')}",
            "writeClasspath"]
-    res = subprocess.run(cmd, cwd=HERE, stdout=sys.stderr, stderr=sys.stderr, stdin=subprocess.DEVNULL)
+    # no JVM of the build (the sbt script's own java probes included) keeps
+    # a /tmp/hsperfdata_<user> file
+    env = dict(os.environ, JAVA_TOOL_OPTIONS="-XX:-UsePerfData")
+    res = subprocess.run(cmd, cwd=HERE, stdout=sys.stderr, stderr=sys.stderr, stdin=subprocess.DEVNULL, env=env)
     if res.returncode != 0 or not os.path.exists(cp_file):
         log("build failed")
         sys.exit(3)
@@ -100,7 +104,18 @@ def run_once(cp, a, seed):
     work = os.path.join(BUILD, "work", f"{a.workload}-{seed}-{os.getpid()}")
     shutil.rmtree(work, ignore_errors=True)
     os.makedirs(os.path.join(work, "tmp"))
-    cmd = ["java", f"-Xms{JVM_HEAP}", f"-Xmx{JVM_HEAP}", "-XX:+UseG1GC",
+    # C1 only (TieredStopAtLevel=1): C2-compiling Spark's per-micro-batch
+    # code takes minutes of CPU on a cold JVM, far longer than a run, and the
+    # batches keep getting faster all the while. CompileThresholdScaling: the
+    # planner code runs a few times per micro-batch and would otherwise cross
+    # the compile thresholds one method at a time for minutes; at 0.1 the
+    # JIT is done within the first two batches. No code cache flushing: the
+    # sweeper otherwise discards code that went cold during set-up and a wave
+    # of recompiles lands inside the timed window. A fixed heap keeps heap
+    # growth out of the warm-up (memory is reported as live data, not as
+    # resident set).
+    cmd = ["java", f"-Xms{JVM_HEAP}", f"-Xmx{JVM_HEAP}", "-XX:+UseG1GC", "-XX:TieredStopAtLevel=1",
+           "-XX:CompileThresholdScaling=0.1", "-XX:-UseCodeCacheFlushing", "-XX:-UsePerfData",
            f"-Djava.io.tmpdir={os.path.join(work, 'tmp')}",
            "-Dspark.ui.enabled=false", "-Dderby.system.home=" + os.path.join(work, "derby")]
     for p in ADD_OPENS:
@@ -138,16 +153,18 @@ def steadiness(cp, a):
     if os.path.exists(spec_path):
         with open(spec_path) as f:
             bounds = {m["name"]: m.get("bound") for m in json.load(f)["end_to_end"]}
-    values, drifts, failed = {}, [], 0
+    values, drifts, jits, failed = {}, [], [], 0
     for k in range(a.steadiness):
         res, info = run_once(cp, a, a.seed + k)
         failed += res["failed"]
         drifts.append(info.get("drift", float("nan")))
+        jits.append(info.get("window_jit_ms", -1))
         for name, m in res["metrics"].items():
             values.setdefault(name, []).append(m["value"])
         print(json.dumps({"seed": a.seed + k, "correct": res["correct"], "failed": res["failed"],
                           "metrics": {n: m["value"] for n, m in res["metrics"].items()},
-                          "drift": info.get("drift")}), flush=True)
+                          "drift": info.get("drift"), "window_jit_ms": info.get("window_jit_ms")}),
+              flush=True)
     print(f"\n{a.workload}: {a.steadiness} runs, {failed} failed operations")
     print(f"{'metric':<20}{'median':>12}{'q1':>12}{'q3':>12}{'spread':>9}{'bound':>8}  ok")
     for name, vs in values.items():
@@ -159,7 +176,8 @@ def steadiness(cp, a):
     d = [x for x in drifts if x == x]
     if d:
         print(f"drift (median batch duration, last / first quarter of the window): "
-              f"median {statistics.median(d):.3f}, max {max(d):.3f}")
+              f"median {statistics.median(d):.3f}, min {min(d):.3f}, max {max(d):.3f}; "
+              f"JIT compile time inside the window: max {max(jits)} ms")
 
 
 def main():

@@ -22,24 +22,32 @@ final case class CheckResult(attempted: Long, failed: Long, sinkDeadRows: Long, 
   * violation counts as one failed operation; the attempted operations are
   * the input records checked.
   *
-  *  1. every input record with an alert route is DD-submitted at least once
-  *     or dead-lettered; every poison record is dead-lettered;
-  *  2. no submit carries more than 100 records of one tag;
+  *  1. coverage: every record the deliver query read (warm-up and timed
+  *     window alike) that has an alert route is DD-submitted at least once
+  *     or dead-lettered, and every poison record is dead-lettered. The
+  *     routed / poison / ignored status of each line kind comes from the
+  *     batch recompute over the sampled batches;
+  *  2. no submit carries more than 100 records of one tag (every submit);
   *  3. CloudWatch is put only for configured regions, after the same
-  *     records' DD submit succeeded;
+  *     records' DD submit succeeded (every put);
   *  4. delivered + dead-lettered DD points equal `MetricProject.project`
-  *     over the same lines, up to duplicates;
+  *     over the lines of the sampled batches (the first ones of the window,
+  *     [[CheckedRecords]] records or just over), up to duplicates;
   *  5. with the meta query, meta series values equal a static `metaAgg`
   *     recompute, for 1-minute windows the watermark has closed and the
-  *     recomputed lines fully cover.
+  *     recomputed lines fully cover; comparing no point at all is a failure.
+  *
+  * With `corrupt`, one output is falsified per check before checking (the
+  * self-test: each check must report a violation).
   */
 object Checks {
   val BatchCount = 100
   /** Lines the meta check recomputes, ending at the last checked line. */
   val MetaLines = 50000L
-  /** Deliver batches of the window whose records are checked one by one:
-    * enough for every routing path, few enough to keep a run short. */
-  val CheckedBatches = 2
+  /** Records the point-by-point recompute (check 4) covers, in whole deliver
+    * batches from the start of the window: enough for every routing path,
+    * few enough to keep a run short. */
+  val CheckedRecords = 10000L
 
   def rid(line: String): Long =
     XxHash64Function.hash(UTF8String.fromString(line), StringType, 42L)
@@ -50,23 +58,23 @@ object Checks {
     val shards = Workloads.Shards
     val notes = mutable.ArrayBuffer.empty[String]
     val deliver = Batch.completed(dq)
-    // checked records: those read by the first CheckedBatches deliver
-    // batches of the timed window; the meta check also needs earlier lines,
-    // since its closed windows start before the timed window
-    val checkedBatches = deliver.filter(_.startMs >= t0 - 1).take(CheckedBatches)
-    val first = checkedBatches.head
-    def range(s: Int) = (first.from.getOrElse(s"shard-$s.txt", 0L), checkedBatches.last.to.getOrElse(s"shard-$s.txt", 0L))
-    val hi = (0 until shards).map(s => range(s)._2 * shards).min
-    val batchIds = checkedBatches.map(_.id).toSet
+    def lines(bs: Seq[Batch]): IndexedSeq[Long] = bs.flatMap { b =>
+      b.to.toSeq.flatMap { case (sh, end) => (b.from.getOrElse(sh, 0L) until end).map(run.globalIndex(sh, _)) }
+    }.toIndexedSeq.sorted
+    // the sample: records read by the first deliver batches of the timed
+    // window, CheckedRecords or just over; the meta check also needs
+    // earlier lines, since its closed windows start before the window
+    val inWindow = deliver.filter(_.startMs >= t0 - 1)
+    val sample = inWindow.take(1 + inWindow.scanLeft(0L)(_ + _.rows).tail.takeWhile(_ < CheckedRecords).size)
+    val sampleLines = lines(sample)
+    val hi = (0 until shards).map(s => sample.last.to.getOrElse(s"shard-$s.txt", 0L) * shards).min
+    val batchIds = sample.map(_.id).toSet
     val g = new Gen.Generator(run.args.seed, run.spec.shape)
-    val checked = (0 until shards).flatMap { s =>
-      val (a, b) = range(s)
-      (a until b).map(k => k * shards + s)
-    }.sorted.map(i => g.line(i).text)
+    val checked = sampleLines.map(g.line)
     // parallelized, not a local relation: a LocalRelation scans as one task
     def frame(xs: Seq[String]) = spark.sparkContext.parallelize(xs, 4 * shards).toDF("raw")
-    val raw = frame(checked).cache()
-    val universe = mutable.LongMap.empty[Int] // rid -> 0 ok, 1 dead, 2 ignored
+    val raw = frame(checked.map(_.text)).cache()
+    val universe = mutable.LongMap.empty[Int] // rid -> 0 routed, 1 poison, 2 ignored
     // the same public chain as StreamPipeline.metrics, with the statused
     // frame persisted so the three lanes share one parse
     val statused = MetricProject.withStatus(RouteEngine.withRoutes(LogParse.parse(raw, Main.DeployEnv))).persist()
@@ -83,68 +91,114 @@ object Checks {
     p.deadLetter.select(col("raw")).as[String].collect().foreach(l => universe.update(rid(l), 1))
     p.ignored.select(col("record_id")).as[Long].collect().foreach(r => universe.update(r, 2))
     statused.unpersist()
+    raw.unpersist()
     lap("batch recompute")
+    // status of each line kind, where the sample shows it to be uniform
+    val kindStatus: Map[Int, Int] = checked.groupBy(_.kind).flatMap { case (k, ls) =>
+      ls.flatMap(l => universe.get(rid(l.text))).distinct match {
+        case Seq(st) => Some(k -> st)
+        case _ => None
+      }
+    }
     var failed = 0L
     def violate(n: Long, what: String): Unit = if (n > 0) { failed += n; notes += s"$n × $what" }
 
-    // what the sinks saw, from the checked batches only
-    val subs = Capture.submits.asScala.filter(s => batchIds.contains(s.batchId)).toIndexedSeq
-    val got = mutable.HashSet.empty[Long]
-    val acceptSeq = mutable.LongMap.empty[Long]
+    // what the sinks saw
+    val subs = Capture.submits.asScala.toIndexedSeq
+    val acceptSeq = mutable.LongMap.empty[Long] // rid -> first accepting submit
     subs.foreach { s =>
       var k = 0
       while (k < s.rids.length) {
-        if (s.accepted(k)) {
-          got += s.digests(k)
-          if (acceptSeq.getOrElse(s.rids(k), Long.MaxValue) > s.seqNo) acceptSeq.update(s.rids(k), s.seqNo)
-        }
+        if (s.accepted(k) && acceptSeq.getOrElse(s.rids(k), Long.MaxValue) > s.seqNo) acceptSeq.update(s.rids(k), s.seqNo)
         k += 1
       }
     }
-    if (corrupt && got.nonEmpty) { got -= got.head; notes += "self-test: dropped one delivered DD point" }
+    val got = mutable.HashSet.empty[Long]
+    subs.filter(s => batchIds.contains(s.batchId)).foreach { s =>
+      var k = 0
+      while (k < s.rids.length) { if (s.accepted(k)) got += s.digests(k); k += 1 }
+    }
     val sinkDead = mutable.LongMap.empty[Unit]
     val sinkDir = new java.io.File(run.deadLetterPath, "sink")
     if (sinkDir.exists()) spark.read.parquet(sinkDir.getPath).filter(col("kind") === "dd")
       .select("tag", "dd").collect().foreach { r =>
         val dd = r.getStruct(1)
-        if (universe.contains(dd.getLong(0))) { got += Digest.ddRow(dd, r.getString(0)); sinkDead.update(dd.getLong(0), ()) }
+        sinkDead.update(dd.getLong(0), ())
+        if (universe.contains(dd.getLong(0))) got += Digest.ddRow(dd, r.getString(0))
       }
     val parseDead = mutable.LongMap.empty[Unit]
     val parseDir = new java.io.File(run.deadLetterPath, "parse")
     if (parseDir.exists()) spark.read.parquet(parseDir.getPath).select("raw").as[String].collect()
       .foreach(l => parseDead.update(rid(l), ()))
-
     lap("dead letters read")
-    // 1. coverage
-    violate(universe.count { case (r, st) => st == 0 && !acceptSeq.contains(r) && !sinkDead.contains(r) },
-      "routed record neither DD-submitted nor dead-lettered")
-    violate(universe.count { case (r, st) => st == 1 && !parseDead.contains(r) }, "poison record not dead-lettered")
+
+    val puts = mutable.ArrayBuffer.empty[Capture.CwPut] ++ Capture.cwPuts.asScala
+    val capSubs = mutable.ArrayBuffer.empty[Long] ++ subs.map(_.rids.distinct.length.toLong)
+    val gotMetaFix: Map[(String, String, Long), Double] => Map[(String, String, Long), Double] =
+      if (corrupt) m => m.headOption.map { case (k, v) => m.updated(k, v + 1) }.getOrElse(m) else identity
+    if (corrupt) {
+      // one falsified output per check
+      universe.collectFirst { case (r, 0) if acceptSeq.contains(r) && !sinkDead.contains(r) => r }
+        .foreach(acceptSeq.remove)
+      capSubs += BatchCount + 1
+      acceptSeq.headOption.foreach { case (r, _) =>
+        puts += new Capture.CwPut(0L, -1L, "eu-west-1", Array.empty, 0L)
+        puts += new Capture.CwPut(0L, -1L, Gen.ConfiguredRegions.head, Array(r), 0L)
+      }
+      if (got.nonEmpty) got -= got.head
+      notes += "self-test: one output falsified per check"
+    }
+
+    // 1. coverage, over every record the deliver query read
+    val allLines = lines(deliver)
+    var covered, uncovered, unknown = 0L
+    var poisonLost, windowSinkDead = 0L
+    val windowFrom = deliver.find(_.startMs >= t0 - 1).map(b => lines(Seq(b)).head).getOrElse(Long.MaxValue)
+    allLines.foreach { i =>
+      val l = g.line(i)
+      val r = rid(l.text)
+      kindStatus.get(l.kind) match {
+        case Some(0) =>
+          covered += 1
+          if (!acceptSeq.contains(r) && !sinkDead.contains(r)) uncovered += 1
+          if (i >= windowFrom && sinkDead.contains(r)) windowSinkDead += 1
+        case Some(1) => covered += 1; if (!parseDead.contains(r)) poisonLost += 1
+        case Some(_) => covered += 1
+        case None => unknown += 1
+      }
+    }
+    lap("coverage")
+    violate(uncovered, "[coverage] routed record neither DD-submitted nor dead-lettered")
+    violate(poisonLost, "[coverage] poison record not dead-lettered")
     // 2. per-tag batch cap
-    violate(subs.count(s => s.rids.distinct.length > BatchCount), s"submit with more than $BatchCount records")
+    violate(capSubs.count(_ > BatchCount).toLong, s"[batch cap] submit with more than $BatchCount records")
     // 3. CloudWatch only for configured regions, after DD success
-    val puts = Capture.cwPuts.asScala.filter(_.rids.exists(universe.contains)).toIndexedSeq
-    violate(puts.count(p => !Gen.ConfiguredRegions.contains(p.region)), "CloudWatch put for an unconfigured region")
+    violate(puts.count(p => !Gen.ConfiguredRegions.contains(p.region)).toLong, "[cw region] CloudWatch put for an unconfigured region")
     violate(puts.map(p => p.rids.count(r => acceptSeq.getOrElse(r, Long.MaxValue) > p.seqNo).toLong).sum,
-      "CloudWatch datum put before its record's DD submit succeeded")
+      "[cw order] CloudWatch datum put before its record's DD submit succeeded")
     // 4. DD points equal the batch recompute, up to duplicates
-    violate((expected -- got).size, "expected DD point never delivered nor dead-lettered")
-    violate((got -- expected).size, "delivered DD point not in the batch recompute")
+    violate((expected -- got).size, "[dd points] expected DD point never delivered nor dead-lettered")
+    violate((got -- expected).size, "[dd points] delivered DD point not in the batch recompute")
     // 5. meta series over closed, fully covered windows
-    val (metaPoints, metaBad) = mq.map(q => checkMeta(spark, run, q, g, hi, frame)).getOrElse((0, 0))
-    violate(metaBad, "meta series value differs from the static recompute")
+    mq.foreach { q =>
+      val (metaPoints, metaBad) = checkMeta(spark, run, q, g, hi, frame, gotMetaFix)
+      violate(metaBad, "[meta] meta series value differs from the static recompute")
+      violate(if (metaPoints == 0) 1 else 0, "[meta] no closed, covered window to compare")
+      notes += s"compared $metaPoints meta series points"
+    }
     lap("meta recompute")
-    notes += s"checked ${universe.size} records (${universe.count(_._2 == 1)} poison, " +
-      s"${universe.count(_._2 == 2)} without alert route), ${expected.size} DD points, ${puts.size} CW puts, " +
-      s"$metaPoints meta series points"
-    raw.unpersist()
-    CheckResult(universe.size.toLong, failed, sinkDead.size.toLong, notes.toSeq)
+    notes += s"coverage over ${allLines.size} records read ($unknown of kinds without a uniform status); " +
+      s"recomputed ${universe.size} records (${universe.count(_._2 == 1)} poison, " +
+      s"${universe.count(_._2 == 2)} without alert route), ${expected.size} DD points; ${puts.size} CW puts"
+    CheckResult(covered, failed, windowSinkDead, notes.toSeq)
   }
 
   /** Meta series shipped for 1-minute windows that the watermark closed and
     * the recomputed lines fully cover, against a static `metaAgg`; returns
     * (points compared, points that differ). */
   private def checkMeta(spark: SparkSession, run: Run, mq: StreamingQuery, g: Gen.Generator, hi: Long,
-      frame: Seq[String] => org.apache.spark.sql.DataFrame): (Int, Int) = {
+      frame: Seq[String] => org.apache.spark.sql.DataFrame,
+      falsify: Map[(String, String, Long), Double] => Map[(String, String, Long), Double]): (Int, Int) = {
     val shards = Workloads.Shards
     val meta = Batch.completed(mq)
     val metaHi = math.min(hi, (0 until shards).map(s => meta.last.to.getOrElse(s"shard-$s.txt", 0L) * shards).min)
@@ -155,7 +209,10 @@ object Checks {
     // watermark drops them)
     val step = run.spec.shape.stepMicros
     val metaLo = math.max(0L, hi - MetaLines)
-    val coverFrom = (Gen.BaseMicros + metaLo * step) / 1000000L + 30
+    // (no line precedes line 0: from there, the first window is covered
+    // from its start; the base is minute-aligned)
+    val coverFrom =
+      if (metaLo == 0) Gen.BaseMicros / 1000000L else (Gen.BaseMicros + metaLo * step) / 1000000L + 30
     val coverTo = math.min((Gen.BaseMicros + metaHi * step) / 1000000L - 30, wmSec)
     val metaLines = (metaLo until metaHi).iterator.map(g.line).filter(!_.late).map(_.text).toSeq
     val grouped = StreamPipeline.metaAgg(frame(metaLines), Main.DeployEnv)
@@ -165,8 +222,8 @@ object Checks {
     val expMeta = Aggregations.metaSeriesUnified(grouped).collect()
       .filter(r => !r.isNullAt(3) && inWindow(r.getLong(3)))
       .map(r => (r.getString(0), r.getString(2), r.getLong(3)) -> r.getDouble(4)).toMap
-    val gotMeta = Capture.meta.asScala.filter(m => m.pointTs != Long.MinValue && inWindow(m.pointTs))
-      .toSeq.sortBy(_.seqNo).map(m => (m.metric, m.tags, m.pointTs) -> m.value).toMap
+    val gotMeta = falsify(Capture.meta.asScala.filter(m => m.pointTs != Long.MinValue && inWindow(m.pointTs))
+      .toSeq.sortBy(_.seqNo).map(m => (m.metric, m.tags, m.pointTs) -> m.value).toMap)
     (expMeta.size, (expMeta.keySet ++ gotMeta.keySet).count(k => expMeta.get(k) != gotMeta.get(k)))
   }
 }

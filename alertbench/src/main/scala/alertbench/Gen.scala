@@ -42,7 +42,8 @@ object Gen {
   private val titles = IndexedSeq("login_start", "login_done", "sync", "export", "import", "render",
     "billing", "search", "upload", "notify")
 
-  final class Line(val text: String, val late: Boolean)
+  /** A rendered line, its event-time lateness and its kind (index into Kinds). */
+  final class Line(val text: String, val late: Boolean, val kind: Int)
 
   final class Generator(seed: Long, shape: Shape) {
     private val cum = shape.weights.scanLeft(0)(_ + _).tail
@@ -148,7 +149,7 @@ object Gen {
           kvmeta(team, "{\"type\":\"alerts\",\"series\":\"svc.bad\",\"dimensions\":[\"district\"]," +
             "\"stat_type\":\"counter\",\"value_field\":\"value\",\"rule\":\"r-bad\"}")
       }
-      new Line(sb.toString, late)
+      new Line(sb.toString, late, kind)
     }
   }
 }

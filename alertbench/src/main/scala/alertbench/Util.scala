@@ -1,5 +1,7 @@
 package alertbench
 
+import scala.jdk.CollectionConverters._
+
 object Stats {
   /** Linear-interpolated quantile of an unsorted sample (q in [0, 1]). */
   def quantile(xs: collection.Seq[Double], q: Double): Double = {
@@ -34,13 +36,31 @@ object Proc {
     .asInstanceOf[com.sun.management.OperatingSystemMXBean]
   def cpuNs(): Long = os.getProcessCpuTime
 
-  /** Peak resident set of this process (VmHWM), in MB. */
-  def peakRssMb(): Double = {
-    val src = scala.io.Source.fromFile("/proc/self/status")
-    try src.getLines().find(_.startsWith("VmHWM:")).map(_.split("\\s+")(1).toDouble / 1024.0)
-      .getOrElse(Double.NaN)
-    finally src.close()
+  /** Memory the process holds on to: heap in use right after a full
+    * collection plus non-heap in use (metaspace, code cache), in MB. Unlike
+    * the resident set, it does not follow how far the collector has grown
+    * the heap. */
+  def liveMb(): Double = {
+    val m = java.lang.management.ManagementFactory.getMemoryMXBean
+    // the least of three readings: one single reading came out at three
+    // times the others (a requested collection is not guaranteed to have
+    // collected everything unreachable when it returns)
+    (1 to 3).map { _ =>
+      System.gc()
+      (m.getHeapMemoryUsage.getUsed + m.getNonHeapMemoryUsage.getUsed) / 1048576.0
+    }.min
   }
+}
+
+/** JVM counters read at each batch end, to show what a warm-up still spends:
+  * JIT compile time, GC time and Janino (Spark codegen) compilations. */
+object Jvm {
+  private val gcs = java.lang.management.ManagementFactory.getGarbageCollectorMXBeans.asScala
+  private val jit = java.lang.management.ManagementFactory.getCompilationMXBean
+  def jitMs(): Long = jit.getTotalCompilationTime
+  def gcMs(): Long = gcs.map(_.getCollectionTime.max(0L)).sum
+  def janino(): Long = org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+  def snapshot(): (Long, Long, Long) = (jitMs(), gcMs(), janino())
 }
 
 /** Wall-clock anchor: converts System.nanoTime stamps to epoch milliseconds
@@ -52,13 +72,15 @@ object Clock {
   def nowMs(): Double = epochMs(System.nanoTime())
 }
 
-/** Samples process CPU time every few ms so CPU can be read off at batch
+/** Samples process CPU time every few ms, so it can be read off at batch
   * boundaries after the fact. */
 final class CpuSampler extends Thread("cpu-sampler") {
   setDaemon(true)
   private val buf = new java.util.concurrent.ConcurrentLinkedQueue[(Double, Long)]()
   @volatile private var running = true
-  override def run(): Unit = while (running) { buf.add((Clock.nowMs(), Proc.cpuNs())); Thread.sleep(5) }
+  override def run(): Unit = while (running) {
+    buf.add((Clock.nowMs(), Proc.cpuNs())); Thread.sleep(5)
+  }
   def halt(): Unit = { running = false; join() }
   /** Process CPU ns at epoch ms `t`, linearly interpolated between samples. */
   def cpuAt(t: Double): Double = {
@@ -68,7 +90,7 @@ final class CpuSampler extends Thread("cpu-sampler") {
     else if (i < 0) xs.last._2.toDouble
     else if (i == 0) xs.head._2.toDouble
     else {
-      val (t0, c0) = xs(i - 1); val (t1, c1) = xs(i)
+      val ((t0, c0), (t1, c1)) = (xs(i - 1), xs(i))
       c0 + (c1 - c0) * (if (t1 > t0) (t - t0) / (t1 - t0) else 0.0)
     }
   }

@@ -3,8 +3,8 @@
 Runs every workload (including the harness-only flaky_sink) through
 `alertbench/run.py` and checks that the last line of standard output is one
 JSON object carrying `correct`, `attempted`, `failed` and every metric of
-BENCHMARK.json with its unit. A run with `--corrupt 1` drops one delivered
-point before the output checks; the checks must count it as a failure.
+BENCHMARK.json with its unit. A run with `--corrupt 1` falsifies one output
+per output check before checking; every check must report its violation.
 
 Run from the repository root:
 
@@ -24,14 +24,19 @@ with open(os.path.join(ROOT, "BENCHMARK.json")) as f:
     SPEC = json.load(f)
 
 
-def bench(workload, trace=0, corrupt=0):
+# tags of the output checks, as the run logs their violations
+CHECKS = ["[coverage]", "[batch cap]", "[cw region]", "[cw order]", "[dd points]", "[meta]"]
+
+
+def bench(workload, trace=0, corrupt=0, with_log=False):
     res = subprocess.run(
-        [sys.executable, RUN, "--workload", workload, "--seed", "7", "--seconds", "3",
+        [sys.executable, RUN, "--workload", workload, "--seed", "7", "--seconds", "5",
          "--trace", str(trace), "--tiny", "1", "--corrupt", str(corrupt)],
         cwd=ROOT, stdout=subprocess.PIPE, stderr=subprocess.PIPE, text=True, timeout=900)
     if res.returncode != 0:
         raise AssertionError(f"exit {res.returncode}\n{res.stderr[-4000:]}")
-    return json.loads(res.stdout.strip().splitlines()[-1])
+    result = json.loads(res.stdout.strip().splitlines()[-1])
+    return (result, res.stderr) if with_log else result
 
 
 class Smoke(unittest.TestCase):
@@ -60,10 +65,15 @@ class Smoke(unittest.TestCase):
         self.assertEqual(r["failed"], 0)
         self.assertGreater(r["metrics"]["delivery.narrowed_resubmits"]["value"], 0)
 
-    def test_output_checks_catch_a_corrupted_output(self):
-        r = bench("backlog_drain", corrupt=1)
+    def test_every_output_check_catches_a_corrupted_output(self):
+        # traced: steady_rate's traced run adds the meta query, so the meta
+        # check runs too
+        r, log = bench("steady_rate", trace=1, corrupt=1, with_log=True)
         self.assertFalse(r["correct"])
-        self.assertGreaterEqual(r["failed"], 1)
+        self.assertGreaterEqual(r["failed"], len(CHECKS))
+        violations = [l for l in log.splitlines() if "[alertbench] check: " in l and " × [" in l]
+        for tag in CHECKS:
+            self.assertTrue(any(tag in v for v in violations), f"{tag} caught nothing:\n" + "\n".join(violations))
 
 
 if __name__ == "__main__":
