@@ -17,11 +17,12 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
   *
   * Why it exists: the reference's record pipeline is genuinely row-at-a-time
   * imperative work (JSON parse + per-route map lookups). The declarative
-  * chain is the canonical, Catalyst-visible implementation (and the one the
-  * streaming wrapper uses), but higher-order-function + variant expressions
+  * chain is the Catalyst-visible implementation the batch lanes use and the
+  * parity reference, but higher-order-function + variant expressions
   * evaluate interpreted in Spark, costing ~25-40µs/line/core; this
   * `mapPartitions` lane with Jackson runs the same semantics at ~3-5µs —
-  * on par with the Go reference — and is what the hot declared queries use.
+  * on par with the Go reference — and is what the hot declared queries and
+  * the streaming wrapper (`StreamPipeline.deliver`, via [[unified]]) use.
   * This is the sanctioned "genuine per-partition imperative logic" case:
   * one JSON parse per record, zero shuffles, streaming-friendly.
   */

@@ -302,20 +302,54 @@ final class KinesisLiteStream(dir: String, startingPosition: String, maxRecords:
 final case class KinesisLiteShardPartition(
     path: String, shardId: String, startSeq: Long, endSeq: Long) extends InputPartition
 
-/** Reads lines [startSeq, endSeq) of one shard file, in order. */
+/** Reads records [startSeq, endSeq) of one shard file, in order.
+  *
+  * A record is the bytes before a `\n` (or before end of file), the unit
+  * [[KinesisLiteSource.shardEnd]] counts, so sequence numbers always match
+  * the checkpointed offsets — a record containing a lone `\r` stays one
+  * record. The [0, startSeq) prefix is skipped by counting `\n` bytes,
+  * without decoding it; record bytes go to the row as UTF-8 (malformed
+  * sequences replaced) without a round trip through `java.lang.String`. */
 final class KinesisLiteShardReader(p: KinesisLiteShardPartition)
     extends PartitionReader[InternalRow] {
-  private val src = scala.io.Source.fromFile(p.path, "UTF-8")
-  private val it = src.getLines().zipWithIndex
-    .dropWhile(_._2 < p.startSeq)
-    .takeWhile(_._2 < p.endSeq)
-  private var current: (String, Int) = _
-  override def next(): Boolean =
-    if (it.hasNext) { current = it.next(); true } else false
-  override def get(): InternalRow =
-    InternalRow(
-      UTF8String.fromString(current._1),
-      UTF8String.fromString(p.shardId),
-      current._2.toLong)
-  override def close(): Unit = src.close()
+  private val in = new java.io.FileInputStream(p.path)
+  private val buf = new Array[Byte](64 * 1024)
+  private var pos = 0
+  private var lim = 0
+  private val shardId = UTF8String.fromString(p.shardId)
+  private var seq = 0L // sequence of the next record to read
+  private var current: UTF8String = _
+
+  private def fill(): Boolean = {
+    if (pos < lim) return true
+    pos = 0
+    lim = math.max(in.read(buf), 0)
+    lim > 0
+  }
+
+  // skip the prefix: count newlines, decode nothing
+  while (seq < p.startSeq && fill()) {
+    var i = pos
+    while (i < lim && buf(i) != '\n') i += 1
+    if (i < lim) seq += 1
+    pos = math.min(i + 1, lim)
+  }
+
+  override def next(): Boolean = {
+    if (seq >= p.endSeq || !fill()) return false
+    val line = new java.io.ByteArrayOutputStream()
+    var done = false
+    while (!done && fill()) {
+      var i = pos
+      while (i < lim && buf(i) != '\n') i += 1
+      line.write(buf, pos, i - pos)
+      done = i < lim
+      pos = if (done) i + 1 else lim
+    }
+    current = UTF8String.fromBytes(line.toByteArray).makeValid()
+    seq += 1
+    true
+  }
+  override def get(): InternalRow = InternalRow(current, shardId, seq - 1)
+  override def close(): Unit = in.close()
 }

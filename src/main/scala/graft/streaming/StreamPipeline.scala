@@ -14,11 +14,11 @@ import graft.project.MetricProject
   * micro-batches per routing tag → Datadog/CloudWatch submit with 5×
   * exponential-backoff retry (50 ms base) → failed records spilled to a
   * file. Spark mapping: any `readStream` source (file/socket/kinesis
-  * connector in prod; MemoryStream in tests) → the SAME declarative
-  * parse/route/project operators (they are stateless narrow ops, so the
-  * logical plan is incrementalizable untouched) → `foreachBatch` sink that
-  * groups by tag, retries, and appends failures to a parquet dead-letter
-  * path (`FailedLogsFile` analog).
+  * connector in prod; MemoryStream in tests) → the single-pass
+  * `FastKayvee.unified` parse/route/project (a stateless narrow
+  * `mapPartitions`, so the plan is incrementalizable untouched) →
+  * `foreachBatch` sink that groups by tag, retries, and appends failures to
+  * a parquet dead-letter path (`FailedLogsFile` analog).
   *
   * Scale: the only stateful operator is the windowed volume aggregation
   * (state store, watermark-bounded); everything else is narrow → the
@@ -26,10 +26,7 @@ import graft.project.MetricProject
   */
 object StreamPipeline {
 
-  /** Operating envelope, mirroring the reference's config (`main.go:54-59`).
-    * `fastLane` switches the dd projection to the imperative FastKayvee
-    * implementation (same semantics — FastKayveeParitySpec — at ~8× the
-    * per-line throughput; dead-letter splitting stays declarative). */
+  /** Operating envelope, mirroring the reference's config (`main.go:54-59`). */
   final case class Config(
       deployEnv: String,
       triggerInterval: String = "5 seconds", // BatchInterval (main.go:57)
@@ -37,7 +34,6 @@ object StreamPipeline {
       retryBaseMs: Long = 50,
       deadLetterPath: Option[String] = None, // FailedLogsFile (main.go:55)
       checkpointLocation: Option[String] = None, // KCL DynamoDB lease table analog
-      fastLane: Boolean = false,
       batchCount: Int = 100, // BatchCount (main.go:56)
       // the four configured CW region clients (main.go:61-66)
       cwRegions: Set[String] = Set("us-west-1", "us-west-2", "us-east-1", "us-east-2"),
@@ -80,38 +76,28 @@ object StreamPipeline {
     * failures (raw line + error) under `deadLetterPath/parse`, sink-stage
     * failures (typed dd rows) under `deadLetterPath/sink`.
     *
-    * No driver-side collect and no shuffle: delivery is partition-local
-    * `mapPartitions` (see [[Delivery.deliverPartition]] for why that is the
-    * faithful analog of kbc's per-shard batching). Caller starts the
-    * returned writer. */
+    * The record path is `FastKayvee.unified`: one Jackson pass per line
+    * (the frame's first column) yields its dd, cw and dead rows,
+    * row-for-row identical to `Delivery.unifiedFromStatused` over the
+    * declarative chain (FastKayveeParitySpec, StreamingSpec). Streamed, that
+    * chain's variant/HOF expressions evaluate interpreted and its
+    * three-branch plan is re-analysed in every micro-batch.
+    *
+    * No driver-side collect: delivery is partition-local `mapPartitions`
+    * (see [[Delivery.deliverPartition]] for why that is the faithful analog
+    * of kbc's per-shard batching). Caller starts the returned writer. */
   def deliver(
       raw: DataFrame,
       cfg: Config,
       sink: BatchSink,
       cwSink: Option[Delivery.CwSink] = None
   ): DataStreamWriter[Row] = {
-    val writer =
-      if (cfg.fastLane) {
-        val u = graft.fast.FastKayvee.unified(raw, cfg.deployEnv).toDF()
-        u.writeStream
-          .trigger(Trigger.ProcessingTime(cfg.triggerInterval))
-          .foreachBatch { (batch: DataFrame, _: Long) =>
-            batch.persist()
-            try deliverBatch(batch, cfg, sink, cwSink)
-            finally { batch.unpersist(); () }
-          }
-      } else {
-        // stream the statused frame (one parse per record); all lanes are
-        // derived from the persisted micro-batch inside foreachBatch
-        val statused = MetricProject.withStatus(
-          RouteEngine.withRoutes(LogParse.parse(raw, cfg.deployEnv)))
-        statused.writeStream
-          .trigger(Trigger.ProcessingTime(cfg.triggerInterval))
-          .foreachBatch { (batch: DataFrame, _: Long) =>
-            batch.persist()
-            try deliverBatch(Delivery.unifiedFromStatused(batch), cfg, sink, cwSink)
-            finally { batch.unpersist(); () }
-          }
+    val writer = graft.fast.FastKayvee.unified(raw, cfg.deployEnv).toDF().writeStream
+      .trigger(Trigger.ProcessingTime(cfg.triggerInterval))
+      .foreachBatch { (batch: DataFrame, _: Long) =>
+        batch.persist()
+        try deliverBatch(batch, cfg, sink, cwSink)
+        finally { batch.unpersist(); () }
       }
     cfg.checkpointLocation.fold(writer)(c => writer.option("checkpointLocation", c))
   }
@@ -225,20 +211,6 @@ object StreamPipeline {
         col("application"), col("grp"), col("cnt"), col("sz"))
   }
 
-  /** [[metaAgg]] over the imperative `FastKayvee.meta` parse (~8× the
-    * declarative per-line throughput; parity: FastKayveeParitySpec). The
-    * meta rows arrive minute-bucketed already, so the 1-minute window over
-    * the bucket timestamp is the bucket itself — same grouped schema. */
-  def metaAggFast(raw: DataFrame, deployEnv: String, watermark: String = "2 minutes"): DataFrame =
-    graft.fast.FastKayvee.meta(raw, deployEnv).toDF()
-      .withColumn("ts", col("window_start").cast("timestamp"))
-      .withWatermark("ts", watermark)
-      .groupBy(window(col("ts"), "1 minute").as("w"), col("kind"),
-        col("env"), col("application"), col("grp"))
-      .agg(count(lit(1)).as("cnt"), sum(col("nbytes")).as("sz"))
-      .select(col("w.start").as("window_start"), col("kind"), col("env"),
-        col("application"), col("grp"), col("cnt"), col("sz"))
-
   /** Streaming `shipMetrics` (`metrics.go:91-172`): the fused meta
     * aggregate ([[metaAgg]] — one source reader, one parse, one shuffle)
     * projected into DD series rows and submitted per trigger under tag
@@ -265,8 +237,7 @@ object StreamPipeline {
       sink: BatchSink,
       exactlyOnce: Boolean = false
   ): DataStreamWriter[Row] = {
-    val agg = if (cfg.fastLane) metaAggFast(raw, cfg.deployEnv) else metaAgg(raw, cfg.deployEnv)
-    val grouped = agg
+    val grouped = metaAgg(raw, cfg.deployEnv)
       .select(unix_timestamp(col("window_start")).as("window_start"), col("kind"),
         col("env"), col("application"), col("grp"), col("cnt"), col("sz"))
     val series = graft.agg.Aggregations.metaSeriesUnified(grouped)

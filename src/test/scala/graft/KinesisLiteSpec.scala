@@ -195,6 +195,39 @@ class KinesisLiteSpec extends SparkSpec {
     assert(KinesisLiteSource.shardFiles(dir).isEmpty)
   }
 
+  test("shard reader keeps a lone CR in its record and reads a deep range exactly") {
+    import graft.streaming.{KinesisLiteShardPartition, KinesisLiteShardReader, KinesisLiteSource}
+    val dir = Files.createTempDirectory("klite-reader").toString
+    val f = Paths.get(dir, "shard-0.txt")
+    // lone \r inside records (a line-reader would split them), a record
+    // longer than the reader's 64 KiB buffer, an empty record, multi-byte
+    // UTF-8, and an unterminated last record
+    val records = (0 until 3000).map {
+      case 7    => "a\rb"
+      case 8    => "\r"
+      case 1500 => "x" * 100000
+      case 2000 => ""
+      case i    => s"rec-$i-é漢-" + ("y" * (i % 50))
+    }
+    Files.write(f, records.mkString("\n").getBytes("UTF-8"))
+    assert(KinesisLiteSource.shardEnd(f.toFile) === records.size.toLong)
+    def read(start: Long, end: Long): Seq[(String, Long)] = {
+      val r = new KinesisLiteShardReader(
+        KinesisLiteShardPartition(f.toString, "shard-0.txt", start, end))
+      try Iterator.continually(r.next()).takeWhile(identity)
+        .map(_ => (r.get().getUTF8String(0).toString, r.get().getLong(2))).toList
+      finally r.close()
+    }
+    val expect = records.zipWithIndex.map { case (l, i) => (l, i.toLong) }
+    // the whole shard: one record per \n-terminated line, sequence = index
+    assert(read(0L, records.size.toLong) === expect)
+    assert(read(5L, 12L) === expect.slice(5, 12))
+    // deep batches, across the long record and to the unterminated end
+    assert(read(1499L, 1502L) === expect.slice(1499, 1502))
+    assert(read(2900L, 3000L) === expect.slice(2900, 3000))
+    assert(read(2999L, 5000L) === expect.slice(2999, 3000))
+  }
+
   test("idle triggers re-read no shard bytes (driver I/O is O(appended), not O(stream))") {
     import graft.streaming.KinesisLiteSource
     KinesisLiteBuffers.rows.clear(); KinesisLiteBuffers.batchSizes.clear()

@@ -51,13 +51,19 @@ class SaltedJoinSpec extends SparkSpec {
     import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
     val sc = spark.sparkContext
     val conf = spark.conf
+    val salts = 8
     val oldBroadcast = conf.get("spark.sql.autoBroadcastJoinThreshold")
     val oldAqe = conf.get("spark.sql.adaptive.enabled")
+    val oldShuffle = conf.get("spark.sql.shuffle.partitions")
     conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     conf.set("spark.sql.adaptive.enabled", "false")
+    // the salt buckets must land in distinct shuffle partitions, or the
+    // measured spread reflects the partition count, not the salting: at 4
+    // partitions (a 4-core session) the salted max record share was 0.56,
+    // at 8 hash collisions left 0.32, at 4× the salt count 0.21
+    conf.set("spark.sql.shuffle.partitions", (salts * 4).toString)
     try {
 
-    val salts = 8
     val fact = spark.range(0, 4000000)
       .select(when(col("id") % 5 === 0, col("id") % 100).otherwise(1L).as("k"),
         col("id").as("v"))
@@ -86,21 +92,28 @@ class SaltedJoinSpec extends SparkSpec {
         durs.max, durs(durs.size / 2))
     }
 
-    val (plainRecShare, plainDurShare, plainMax, plainMed) = joinStageSpread {
+    def plain(): Unit =
       fact.join(dim, "k").groupBy(col("k"))
         .agg(count(lit(1)).as("n"), sum(col("w")).as("sw")).collect()
-    }
-    val (saltedRecShare, saltedDurShare, saltedMax, saltedMed) = joinStageSpread {
+    def salted(): Unit = {
       val sf = fact.withColumn("salt", (rand(42) * salts).cast("int"))
       val sd = dim.crossJoin(
         spark.range(0, salts).select(col("id").cast("int").as("salt")))
       sf.join(sd, Seq("k", "salt")).groupBy(col("k"))
         .agg(count(lit(1)).as("n"), sum(col("w")).as("sw")).collect()
     }
+    // alternating reps; a rep's slowest task is compared by its least value
+    // over the reps, which host contention can only raise
+    val reps = (1 to 3).map(_ => (joinStageSpread(plain()), joinStageSpread(salted())))
+    val (plainRecShare, plainDurShare, _, plainMed) = reps.head._1
+    val (saltedRecShare, saltedDurShare, _, saltedMed) = reps.head._2
+    val plainMax = reps.map(_._1._3).min
+    val saltedMax = reps.map(_._2._3).min
 
     info(f"join-stage max-task record share: plain $plainRecShare%.3f vs salted $saltedRecShare%.3f")
-    info(f"join-stage task durations: plain max/median $plainMax/$plainMed ms " +
-      f"(share $plainDurShare%.3f) vs salted $saltedMax/$saltedMed ms (share $saltedDurShare%.3f)")
+    info(f"join-stage slowest task (best of 3): plain $plainMax ms vs salted $saltedMax ms; " +
+      f"first rep median/share: plain $plainMed ms/$plainDurShare%.3f vs salted " +
+      f"$saltedMed ms/$saltedDurShare%.3f")
     // unsalted: one task owns the hot key → ~80% of the stage's records;
     // salted: the hot key spreads across 8 buckets. Records are fully
     // deterministic; the duration share is the same skew seen in time.
@@ -109,13 +122,15 @@ class SaltedJoinSpec extends SparkSpec {
       f"salting should at least halve the max-task record share: " +
         f"$saltedRecShare%.3f vs $plainRecShare%.3f")
     assert(saltedMax < plainMax,
-      s"salted slowest task ($saltedMax ms) should beat the unsalted hot task ($plainMax ms)")
+      s"salted slowest task (best of 3: $saltedMax ms) should beat the unsalted hot task " +
+        s"(best of 3: $plainMax ms)")
     } finally {
       // restore even if a measured join or assertion throws — the session
       // is shared, and a leaked adaptive.enabled=false would skew every
       // later suite
       conf.set("spark.sql.autoBroadcastJoinThreshold", oldBroadcast)
       conf.set("spark.sql.adaptive.enabled", oldAqe)
+      conf.set("spark.sql.shuffle.partitions", oldShuffle)
     }
   }
 }

@@ -29,10 +29,14 @@ object SinkState {
   val cwDelivered = new ConcurrentLinkedQueue[(String, Int)]()
   val cwAttempts = new AtomicInteger(0)
   val cwFail = new AtomicInteger(0)
+  // every accepted row, keyed by tag (DD) or region (CW)
+  val ddRows = new ConcurrentLinkedQueue[(String, Row)]()
+  val cwRows = new ConcurrentLinkedQueue[(String, Row)]()
   def reset(failures: Int = 0, partial: Int = 0, cwFailures: Int = 0): Unit = {
     delivered.clear(); deliveredMetrics.clear(); seriesPoints.clear(); threads.clear()
     attempts.set(0); failuresToInject.set(failures); partialFailures.set(partial)
     cwDelivered.clear(); cwAttempts.set(0); cwFail.set(cwFailures)
+    ddRows.clear(); cwRows.clear()
   }
 }
 
@@ -51,6 +55,7 @@ class TestSink extends BatchSink {
       throw new graft.streaming.Delivery.PartialSendBatchError("partial", Seq(rows.last))
     }
     rows.foreach(r => SinkState.deliveredMetrics.add(r.getAs[String]("metric")))
+    rows.foreach(r => SinkState.ddRows.add((tag, r)))
     rows.filter(r => r.schema != null && r.schema.fieldNames.contains("tags_str")).foreach { r =>
       SinkState.seriesPoints.add((r.getAs[String]("metric"), r.getAs[String]("tags_str"),
         r.getAs[Long]("point_ts"), r.getAs[Double]("point_value")))
@@ -66,6 +71,7 @@ class TestCwSink extends graft.streaming.Delivery.CwSink {
       throw new RuntimeException("injected cw failure")
     SinkState.cwFail.set(math.max(SinkState.cwFail.get(), 0))
     SinkState.cwDelivered.add((region, rows.size))
+    rows.foreach(r => SinkState.cwRows.add((region, r)))
   }
 }
 
@@ -216,23 +222,59 @@ class StreamingSpec extends SparkSpec {
     assert(SinkState.delivered.asScala.map(_._2).sum === 1)
   }
 
-  test("fast lane: parse dead letters and CW fan-out match the declarative lane") {
+  test("deliver's DD, CW and dead-letter output equals the declarative recompute") {
     implicit val sqlCtx = spark.sqlContext
     SinkState.reset()
-    val dlq = Files.createTempDirectory("graft-dlq-fast").toString + "/failed"
+    val dlq = Files.createTempDirectory("graft-dlq-parity").toString + "/failed"
+    val header = "2017-08-15T18:39:07.000000+00:00 h production--app/arn[1]: "
+    val lines = Seq(
+      "not a log line at all", // bad header
+      header + """{"bad":{"x":1},"_kvmeta":{"team":"t","routes":[{"type":"alerts","series":"s","dimensions":["bad"],"stat_type":"counter","value_field":"v","rule":"r1"}]}}""",
+      golden,
+      regionLine, // CW datum for a configured region
+      regionLine.replace("us-west-2", "eu-west-1"), // region outside cwRegions
+      header + "[conn1] update clever.students nscanned:1 2964ms", // mongo rule
+      "2019-10-09T20:19:43.000000+00:00 aws-rds production--db/arn[1]: " + """{"user":"clever[clever]"}""",
+      header + """{"via":"process-metrics","source":"s","title":"t1","type":"counter","value":5}""",
+      header + """{"x":1}""" // no route: ignored
+    )
+    val cfg = Config("test-env", triggerInterval = "1 seconds", deadLetterPath = Some(dlq))
     val ms = MemoryStream[String]
     val raw = ms.toDF().withColumnRenamed("value", "raw")
-    val q = StreamPipeline
-      .deliver(raw, Config("test-env", triggerInterval = "1 seconds",
-        deadLetterPath = Some(dlq), fastLane = true), new TestSink, Some(new TestCwSink))
-      .start()
+    val q = StreamPipeline.deliver(raw, cfg, new TestSink, Some(new TestCwSink)).start()
     try {
-      ms.addData("garbage line", golden, regionLine)
+      ms.addData(lines: _*)
       q.processAllAvailable()
     } finally q.stop()
-    assert(spark.read.parquet(dlq + "/parse").count() === 1)
-    assert(SinkState.delivered.asScala.map(_._2).sum === 2)
-    assert(SinkState.cwDelivered.asScala.toSeq === Seq(("us-west-2", 1)))
+
+    val recompute = graft.streaming.Delivery.unifiedFromStatused(
+      graft.project.MetricProject.withStatus(graft.routes.RouteEngine.withRoutes(
+        graft.parse.LogParse.parse(lines.toDF("raw"), "test-env")))).collect().toSeq
+    def norm(tag: String, r: Row): String =
+      (tag +: r.toSeq.map {
+        case a: scala.collection.Seq[_] => a.toList
+        case v => v
+      }).toString
+    def ofKind(k: String) = recompute.filter(_.getAs[String]("kind") == k)
+    val wantDd = ofKind("dd").map(r => norm(r.getAs[String]("tag"), r.getAs[Row]("dd"))).sorted
+    val wantCwAll = ofKind("cw").map(r => r.getAs[String]("tag") -> r.getAs[Row]("cw"))
+    val wantCw = wantCwAll.filter(c => cfg.cwRegions.contains(c._1)).map((norm _).tupled).sorted
+    val wantDead = ofKind("dead").map(r => r.getAs[String]("raw") -> r.getAs[String]("err")).toSet
+    // the corpus exercises every branch the assertions below compare
+    assert(wantDd.exists(_.contains("kv.oauth.login_start")))
+    assert(wantDd.exists(_.contains("mongo")), wantDd.mkString("\n"))
+    assert(wantDd.exists(_.contains("rds")), wantDd.mkString("\n"))
+    assert(wantDd.exists(_.contains("process-metrics")), wantDd.mkString("\n"))
+    assert(wantCwAll.map(_._1).toSet === Set("us-west-2", "eu-west-1"))
+    assert(wantDead.size === 2)
+
+    val gotDd = SinkState.ddRows.asScala.toSeq.map((norm _).tupled).sorted
+    val gotCw = SinkState.cwRows.asScala.toSeq.map((norm _).tupled).sorted
+    val gotDead = spark.read.parquet(dlq + "/parse").collect()
+      .map(r => r.getAs[String]("raw") -> r.getAs[String]("err")).toSet
+    assert(gotDd === wantDd)
+    assert(gotCw === wantCw)
+    assert(gotDead === wantDead)
   }
 
   test("CW fan-out: region-keyed submission after dd success; cw errors logged, not retried") {
@@ -322,23 +364,6 @@ class StreamingSpec extends SparkSpec {
       assert(rows.head.getAs[String]("application") === "app-a")
       assert(rows.head.getAs[String]("team") === "team-x")
     } finally q.stop()
-  }
-
-  test("fast-lane streaming delivery matches declarative-lane output") {
-    implicit val sqlCtx = spark.sqlContext
-    SinkState.reset()
-    val ms = MemoryStream[String]
-    val raw = ms.toDF().withColumnRenamed("value", "raw")
-    val q = StreamPipeline
-      .deliver(raw, Config("test-env", triggerInterval = "1 seconds", fastLane = true), new TestSink)
-      .start()
-    try {
-      ms.addData(golden, regionLine)
-      q.processAllAvailable()
-    } finally q.stop()
-    val byTag = SinkState.delivered.asScala.toSeq.groupBy(_._1)
-    assert(byTag.keySet === Set("default", "us-west-2"))
-    assert(byTag.values.flatten.map(_._2).sum === 2)
   }
 
   test("late rows beyond the watermark are dropped from the closed window (§7.4 tolerance)") {
@@ -550,29 +575,6 @@ class StreamingSpec extends SparkSpec {
       assert(rows().get("app-a").contains(40L)) // max(60-50, 60-20)
       assert(rows().get("app-b").contains(1L))
     } finally q.stop()
-  }
-
-  test("fast-lane metaAgg produces the same grouped frame as the declarative lane") {
-    implicit val sqlCtx = spark.sqlContext
-    val lines = Seq(
-      """2017-08-15T18:39:07.000000+00:00 h production--app-f/arn[1]: {"_kvmeta":{"team":"tf","routes":[{"type":"analytics","series":"x","rule":"ana"},{"type":"alerts","series":"s","dimensions":[],"stat_type":"counter","value_field":"","rule":"al"}]}}""",
-      """2017-08-15T18:40:02.000000+00:00 h standalone[1]: {"x":1}"""
-    )
-    def run(queryName: String, agg: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame): Set[String] = {
-      val ms = MemoryStream[String]
-      val q = agg(ms.toDF().withColumnRenamed("value", "raw")).writeStream
-        .format("memory").queryName(queryName).outputMode("update").start()
-      try {
-        ms.addData(lines: _*)
-        q.processAllAvailable()
-        spark.sql(s"SELECT kind, unix_timestamp(window_start), env, application, grp, cnt, sz FROM $queryName")
-          .collect().map(_.toString).toSet
-      } finally q.stop()
-    }
-    val slow = run("meta_slow", raw => StreamPipeline.metaAgg(raw, "test-env"))
-    val fast = run("meta_fast", raw => StreamPipeline.metaAggFast(raw, "test-env"))
-    assert(fast === slow)
-    assert(fast.nonEmpty)
   }
 
   test("always-emit delay tracker keeps ticking 0-gauges through data silence") {
