@@ -222,7 +222,8 @@ class StreamingSpec extends SparkSpec {
     assert(SinkState.delivered.asScala.map(_._2).sum === 1)
   }
 
-  test("deliver's DD, CW and dead-letter output equals the declarative recompute") {
+  // deliver always runs the FastKayvee lane; the declarative lane is the recompute
+  test("fast lane: parse dead letters and CW fan-out match the declarative lane") {
     implicit val sqlCtx = spark.sqlContext
     SinkState.reset()
     val dlq = Files.createTempDirectory("graft-dlq-parity").toString + "/failed"
@@ -364,6 +365,23 @@ class StreamingSpec extends SparkSpec {
       assert(rows.head.getAs[String]("application") === "app-a")
       assert(rows.head.getAs[String]("team") === "team-x")
     } finally q.stop()
+  }
+
+  test("fast-lane streaming delivery matches declarative-lane output") {
+    implicit val sqlCtx = spark.sqlContext
+    SinkState.reset()
+    val ms = MemoryStream[String]
+    val raw = ms.toDF().withColumnRenamed("value", "raw")
+    val q = StreamPipeline
+      .deliver(raw, Config("test-env", triggerInterval = "1 seconds"), new TestSink)
+      .start()
+    try {
+      ms.addData(golden, regionLine)
+      q.processAllAvailable()
+    } finally q.stop()
+    val byTag = SinkState.delivered.asScala.toSeq.groupBy(_._1)
+    assert(byTag.keySet === Set("default", "us-west-2"))
+    assert(byTag.values.flatten.map(_._2).sum === 2)
   }
 
   test("late rows beyond the watermark are dropped from the closed window (§7.4 tolerance)") {
