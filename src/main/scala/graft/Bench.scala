@@ -196,6 +196,16 @@ object Bench {
     */
   val REF_CALIB = 0.085
 
+  /** The calibration wait-loop cap from `GRAFT_BENCH_CALIB_WAITS`; a
+    * malformed value (e.g. "60s") falls back to 12 with a warning instead
+    * of failing the bench before it measures anything. */
+  def calibWaitCap(raw: Option[String]): Int = raw.fold(12) { v =>
+    scala.util.Try(v.trim.toInt).getOrElse {
+      System.err.println(s"BENCH WARN: GRAFT_BENCH_CALIB_WAITS=\"$v\" is not an integer; using 12")
+      12
+    }
+  }
+
   private def d4s(x: Double): String =
     String.format(java.util.Locale.ROOT, "%.4f", Double.box(x))
 
@@ -241,8 +251,7 @@ object Bench {
     // artifacts should come from a healthy window, so a local official
     // run can raise the cap (e.g. GRAFT_BENCH_CALIB_WAITS=60 = 10 min);
     // the default stays 12 so driver-run benches never stall >2 min.
-    val maxWaits =
-      sys.env.getOrElse("GRAFT_BENCH_CALIB_WAITS", "12").toInt
+    val maxWaits = calibWaitCap(sys.env.get("GRAFT_BENCH_CALIB_WAITS"))
     var calibPre = calibrate()
     var calibWaits = 0
     while (calibPre > CALIB_HEALTHY_RATIO * REF_CALIB && calibWaits < maxWaits) {

@@ -21,19 +21,25 @@ package graft.plans
   *
   * Spark's job-level properties (description, scheduler pool) live in
   * InheritableThreadLocals, so pool threads created here inherit the
-  * caller's. Blocks until all thunks complete; rethrows the first
-  * failure's cause.
+  * caller's. Blocks until all thunks complete; on the first failure it
+  * interrupts the sibling thunks, cancels their Spark jobs (tagged per
+  * call), waits for the pool to drain, then rethrows that failure's cause
+  * — it never returns, normally or exceptionally, with a thunk still
+  * running.
   */
 object ParallelJobs {
   def await(thunks: (() => Unit)*): Unit = {
     if (thunks.size <= 1) { thunks.foreach(_.apply()); return }
+    val sc = org.apache.spark.sql.SparkSession.getActiveSession
+      .orElse(org.apache.spark.sql.SparkSession.getDefaultSession).map(_.sparkContext)
+    val tag = s"graft-parallel-jobs-${java.util.UUID.randomUUID()}"
     val pool = java.util.concurrent.Executors.newFixedThreadPool(thunks.size)
+    val futs = thunks.map { t =>
+      pool.submit(new java.util.concurrent.Callable[Unit] {
+        override def call(): Unit = { sc.foreach(_.addJobTag(tag)); t() }
+      })
+    }
     try {
-      val futs = thunks.map { t =>
-        pool.submit(new java.util.concurrent.Callable[Unit] {
-          override def call(): Unit = t()
-        })
-      }
       futs.foreach { f =>
         try f.get()
         catch {
@@ -41,6 +47,14 @@ object ParallelJobs {
             throw Option(e.getCause).getOrElse(e)
         }
       }
-    } finally pool.shutdown()
+      pool.shutdown()
+    } catch {
+      case e: Throwable =>
+        futs.foreach(_.cancel(true))
+        sc.foreach(_.cancelJobsWithTag(tag))
+        pool.shutdownNow()
+        pool.awaitTermination(Long.MaxValue, java.util.concurrent.TimeUnit.MILLISECONDS)
+        throw e
+    }
   }
 }

@@ -20,15 +20,12 @@ import graft.project.MetricProject
   * failed (`alerts_consumer.go:271-281`).
   *
   * Scale shape: the reference's kbc framework forms batches *per Kinesis
-  * shard consumer* — per-tag batches are per-shard-per-tag, never global,
-  * so delivery needs partition-local grouping inside `mapPartitions`, not a
-  * driver-side collect. The deliverable rows are hash-repartitioned by
-  * (tag, record_id): every partition is tag-pure per group and holds whole
-  * records (a record's dd points and cw datums travel together), while the
-  * dominant "default" tag — the vast majority of traffic — still spreads
-  * over all partitions. A plain `repartition($"tag")` would funnel it into
-  * a single task. Delivery side effects run on executors; the driver never
-  * sees a row.
+  * shard consumer* — per-tag batches are per-shard-per-tag, never global.
+  * Delivery therefore runs inside each source partition (one per shard):
+  * [[deliverPartition]] keeps one ≤100-record buffer per tag, with no
+  * exchange or sort ahead of it, so the dominant "default" tag is
+  * delivered by every shard's task in parallel. Delivery side effects run
+  * on executors; the driver never sees a row.
   */
 object Delivery {
 
@@ -191,18 +188,22 @@ object Delivery {
     Nil
   }
 
-  /** Executor-side delivery of one partition of unified rows.
+  /** Executor-side delivery of one partition of unified rows, in the
+    * partition the source produced (one per shard), as kbc's batcher does
+    * per shard consumer (`main.go:54-59`).
     *
-    * PRECONDITION: the partition is sorted by (tag, rid) — the caller's
-    * `sortWithinPartitions` — so a record's rows are consecutive and a
-    * tag's records are consecutive. The iterator is consumed streaming:
-    * only the current ≤`batchCount`-record flush group is buffered, so
-    * executor memory is O(batchCount), matching the reference's ≤100
-    * buffered records per batch (`main.go:56`) — never O(partition), which
-    * a hot micro-batch would blow through.
+    * PRECONDITION: a record's rows are consecutive and share one tag —
+    * the order [[graft.fast.FastKayvee.unified]] emits them in (a record
+    * with CW datums carries its region as the tag of its dd rows too).
+    * The iterator is consumed streaming into one ≤`batchCount`-record
+    * buffer per tag: a tag is flushed when a new record finds its buffer
+    * full, and every tag at partition end. Executor memory is
+    * O(distinct tags × batchCount) rows per task — the same per-shard
+    * bound as the reference's ≤100 buffered records per tag
+    * (`main.go:56`), never O(partition).
     *
-    * Per flush group: submits the dd rows with retry, then — only after a
-    * fully successful dd flush, mirroring the early return at
+    * Per flush: submits the dd rows with retry, then — only after a fully
+    * successful dd flush, mirroring the early return at
     * `alerts_consumer.go:266-269` — the same records' CW datums when the
     * tag is a configured region (logged-not-retried). Rows of records
     * whose dd rows exhausted retries are returned in [[failedSchema]]
@@ -218,40 +219,42 @@ object Delivery {
       batchCount: Int,
       cwRegions: Set[String]
   ): Iterator[Row] = {
+    final class TagBuf(val tag: String) {
+      val dd = mutable.ArrayBuffer.empty[Row]
+      val cw = mutable.ArrayBuffer.empty[Row]
+      var records = 0
+    }
     val failedOut = mutable.ArrayBuffer.empty[Row]
-    val ddBuf = mutable.ArrayBuffer.empty[Row] // current group's dd structs
-    val cwBuf = mutable.ArrayBuffer.empty[Row] // current group's cw structs
-    var curTag: String = null
-    var curRid = 0L
-    var haveRec = false
-    var recCount = 0
+    val bufs = mutable.LinkedHashMap.empty[String, TagBuf]
 
-    def flush(): Unit = {
-      if (recCount == 0) return
+    def flush(b: TagBuf): Unit = {
+      if (b.records == 0) return
       val notDelivered =
-        if (ddBuf.isEmpty) Nil
-        else submitWithRetry(sink, curTag, ddBuf.toSeq, attempts, baseMs)
+        if (b.dd.isEmpty) Nil
+        else submitWithRetry(sink, b.tag, b.dd.toSeq, attempts, baseMs)
       if (notDelivered.nonEmpty) {
         val failedRids = notDelivered.map(_.getLong(0)).toSet
-        failedOut ++= notDelivered.map(d => Row("dd", curTag, d, null))
+        failedOut ++= notDelivered.map(d => Row("dd", b.tag, d, null))
         // failed records' cw datums spill too — replay re-drives both lanes
-        failedOut ++= cwBuf.filter(c => failedRids.contains(c.getLong(0)))
-          .map(c => Row("cw", curTag, null, c))
+        failedOut ++= b.cw.filter(c => failedRids.contains(c.getLong(0)))
+          .map(c => Row("cw", b.tag, null, c))
       }
-      if (notDelivered.isEmpty && cwBuf.nonEmpty && cwRegions.contains(curTag))
+      if (notDelivered.isEmpty && b.cw.nonEmpty && cwRegions.contains(b.tag))
         cwSink.foreach { cs =>
-          try cs.putMetricData(curTag, cwBuf.toSeq)
+          try cs.putMetricData(b.tag, b.cw.toSeq)
           catch {
             case e: Exception =>
               // logged-not-retried (`alerts_consumer.go:278-280`)
               org.slf4j.LoggerFactory.getLogger("graft.streaming.Delivery")
-                .warn(s"error-sending-to-cloudwatch region=$curTag: ${e.getMessage}")
+                .warn(s"error-sending-to-cloudwatch region=${b.tag}: ${e.getMessage}")
           }
         }
-      ddBuf.clear(); cwBuf.clear(); recCount = 0
+      b.dd.clear(); b.cw.clear(); b.records = 0
     }
 
     var kindIdx, tagIdx, ddIdx, cwIdx = -1
+    var prevTag: String = null
+    var prevRid = 0L
     rows.foreach { r =>
       if (kindIdx < 0) {
         kindIdx = r.fieldIndex("kind"); tagIdx = r.fieldIndex("tag")
@@ -262,16 +265,17 @@ object Delivery {
         val s = if (kind == "dd") r.getStruct(ddIdx) else r.getStruct(cwIdx)
         val rid = s.getLong(0)
         val tag = r.getString(tagIdx)
-        if (tag != curTag) { flush(); curTag = tag; haveRec = false }
-        if (!haveRec || rid != curRid) {
+        val b = bufs.getOrElseUpdate(tag, new TagBuf(tag))
+        if (tag != prevTag || rid != prevRid) {
           // record boundary: ≤batchCount records per SendBatch (`main.go:56`)
-          if (recCount >= batchCount) flush()
-          curRid = rid; haveRec = true; recCount += 1
+          if (b.records >= batchCount) flush(b)
+          b.records += 1
+          prevTag = tag; prevRid = rid
         }
-        if (kind == "dd") ddBuf += s else cwBuf += s
+        if (kind == "dd") b.dd += s else b.cw += s
       }
     }
-    flush()
+    bufs.valuesIterator.foreach(flush)
     failedOut.iterator
   }
 }

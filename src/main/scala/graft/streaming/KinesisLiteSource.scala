@@ -81,16 +81,20 @@ object KinesisLiteSource {
 
   /** Incremental scan state of one shard file: how many bytes have been
     * consumed into the newline count, whether the last byte seen was a
-    * newline (an unterminated trailing line still counts as a record), and
-    * the rewrite guards — mtime at scan time plus a fingerprint of the last
-    * `tailLen` (≤8) consumed bytes. The append-only shard model is now
-    * VERIFIED, not assumed: a file rewritten in place (equal length but new
-    * mtime, or grown but with a different byte sequence where the old scan
-    * ended) falls back to a full rescan instead of serving a stale or
-    * garbled count. */
+    * newline (an unterminated trailing line still counts as a record), the
+    * sparse line index (`lineStarts(k)` = byte offset where sequence
+    * `(k + 1) * IndexStride` starts), and the rewrite guards — mtime at
+    * scan time plus a fingerprint of the last `tailLen` (≤8) consumed
+    * bytes. The append-only shard model is now VERIFIED, not assumed: a
+    * file rewritten in place (equal length but new mtime, or grown but with
+    * a different byte sequence where the old scan ended) falls back to a
+    * full rescan instead of serving a stale or garbled count. */
   private final case class ShardScanState(
       scannedBytes: Long, newlines: Long, endsWithNewline: Boolean,
-      lastModified: Long, tailLen: Int, tail: Long)
+      lastModified: Long, tailLen: Int, tail: Long, lineStarts: Vector[Long])
+
+  /** Lines between two entries of a shard's sparse line index. */
+  val IndexStride = 1024
 
   private val scanCache =
     new java.util.concurrent.ConcurrentHashMap[String, ShardScanState]()
@@ -98,6 +102,11 @@ object KinesisLiteSource {
   /** Total bytes read by [[shardEnd]] across the JVM — spec
     * instrumentation for the no-rescan-on-idle-trigger contract. */
   val bytesScanned = new java.util.concurrent.atomic.AtomicLong()
+
+  /** Total bytes the shard readers walked — the skipped prefix from their
+    * seek point plus the records they returned (spec instrumentation for
+    * the seek; the last buffer fetch may read up to 64 KiB past it). */
+  val readerBytes = new java.util.concurrent.atomic.AtomicLong()
 
   /** Current record count (= next sequence) of one shard file.
     *
@@ -110,7 +119,8 @@ object KinesisLiteSource {
     * that shrank (fixture reset — impossible in the append-only shard
     * model) falls back to a full rescan. */
   private val emptyState =
-    ShardScanState(0L, 0L, endsWithNewline = true, lastModified = 0L, tailLen = 0, tail = 0L)
+    ShardScanState(0L, 0L, endsWithNewline = true, lastModified = 0L, tailLen = 0, tail = 0L,
+      lineStarts = Vector.empty)
 
   /** Pack the `n` bytes ending at file offset `end` into a Long fingerprint
     * (NOT charged to [[bytesScanned]] — that counter documents line-count
@@ -165,10 +175,17 @@ object KinesisLiteSource {
           var nl = prev.newlines
           var endNl = prev.endsWithNewline
           var scanned = prev.scannedBytes
+          var starts = prev.lineStarts
           var read = raf.read(buf)
           while (read > 0) {
             var i = 0
-            while (i < read) { if (buf(i) == '\n') nl += 1; i += 1 }
+            while (i < read) {
+              if (buf(i) == '\n') {
+                nl += 1
+                if (nl % IndexStride == 0) starts :+= scanned + i + 1
+              }
+              i += 1
+            }
             endNl = buf(read - 1) == '\n'
             scanned += read
             bytesScanned.addAndGet(read.toLong)
@@ -176,12 +193,21 @@ object KinesisLiteSource {
           }
           val tl = math.min(8L, scanned).toInt
           val next = ShardScanState(scanned, nl, endNl, f.lastModified(), tl,
-            if (tl > 0) tailAt(raf, scanned, tl) else 0L)
+            if (tl > 0) tailAt(raf, scanned, tl) else 0L, starts)
           scanCache.put(path, next)
           next
         } finally raf.close()
       }
     st.newlines + (if (!st.endsWithNewline && st.scannedBytes > 0) 1L else 0L)
+  }
+
+  /** The indexed (sequence, byte offset) of the last line start at or
+    * before `seq` that [[shardEnd]] recorded for this file, or (0, 0) when
+    * it has none. A hint, not a fact: the reader verifies it. */
+  def seekHint(f: java.io.File, seq: Long): (Long, Long) = {
+    val starts = Option(scanCache.get(f.getAbsolutePath)).fold(Vector.empty[Long])(_.lineStarts)
+    val k = math.min(seq / IndexStride, starts.size.toLong).toInt
+    if (k == 0) (0L, 0L) else (k.toLong * IndexStride, starts(k - 1))
   }
 }
 
@@ -280,9 +306,11 @@ final class KinesisLiteStream(dir: String, startingPosition: String, maxRecords:
     val e = end.asInstanceOf[KinesisLiteOffset].shards
     e.toSeq.sortBy(_._1).flatMap { case (shard, endSeq) =>
       val startSeq = s.getOrElse(shard, 0L)
-      if (endSeq > startSeq)
-        Some(KinesisLiteShardPartition(new java.io.File(dir, shard).getPath, shard, startSeq, endSeq))
-      else None
+      if (endSeq > startSeq) {
+        val f = new java.io.File(dir, shard)
+        val (hintSeq, hintByte) = KinesisLiteSource.seekHint(f, startSeq)
+        Some(KinesisLiteShardPartition(f.getPath, shard, startSeq, endSeq, hintSeq, hintByte))
+      } else None
     }.toArray
   }
 
@@ -299,17 +327,24 @@ final class KinesisLiteStream(dir: String, startingPosition: String, maxRecords:
   override def stop(): Unit = ()
 }
 
+/** Records [startSeq, endSeq) of one shard file. (hintSeq, hintByte) is
+  * where the driver's line index says sequence `hintSeq` starts
+  * (≤ startSeq); (0, 0) = no hint. */
 final case class KinesisLiteShardPartition(
-    path: String, shardId: String, startSeq: Long, endSeq: Long) extends InputPartition
+    path: String, shardId: String, startSeq: Long, endSeq: Long,
+    hintSeq: Long = 0L, hintByte: Long = 0L) extends InputPartition
 
 /** Reads records [startSeq, endSeq) of one shard file, in order.
   *
   * A record is the bytes before a `\n` (or before end of file), the unit
   * [[KinesisLiteSource.shardEnd]] counts, so sequence numbers always match
   * the checkpointed offsets — a record containing a lone `\r` stays one
-  * record. The [0, startSeq) prefix is skipped by counting `\n` bytes,
-  * without decoding it; record bytes go to the row as UTF-8 (malformed
-  * sequences replaced) without a round trip through `java.lang.String`. */
+  * record. The reader seeks to the partition's index hint and skips the
+  * [hintSeq, startSeq) remainder by counting `\n` bytes, without decoding
+  * it; with no hint, or when the byte before `hintByte` is not `\n` (the
+  * file was rewritten since the driver indexed it), it counts from byte 0.
+  * Record bytes go to the row as UTF-8 (malformed sequences replaced)
+  * without a round trip through `java.lang.String`. */
 final class KinesisLiteShardReader(p: KinesisLiteShardPartition)
     extends PartitionReader[InternalRow] {
   private val in = new java.io.FileInputStream(p.path)
@@ -320,14 +355,22 @@ final class KinesisLiteShardReader(p: KinesisLiteShardPartition)
   private var seq = 0L // sequence of the next record to read
   private var current: UTF8String = _
 
+  private val startByte: Long =
+    if (p.hintByte > 0 && p.hintSeq <= p.startSeq && {
+          in.getChannel.position(p.hintByte - 1); in.read() == '\n'
+        }) { seq = p.hintSeq; p.hintByte }
+    else { in.getChannel.position(0L); 0L }
+  private var base = startByte // file offset of buf(0)
+
   private def fill(): Boolean = {
     if (pos < lim) return true
+    base += lim
     pos = 0
     lim = math.max(in.read(buf), 0)
     lim > 0
   }
 
-  // skip the prefix: count newlines, decode nothing
+  // skip the remainder of the prefix: count newlines, decode nothing
   while (seq < p.startSeq && fill()) {
     var i = pos
     while (i < lim && buf(i) != '\n') i += 1
@@ -351,5 +394,8 @@ final class KinesisLiteShardReader(p: KinesisLiteShardPartition)
     true
   }
   override def get(): InternalRow = InternalRow(current, shardId, seq - 1)
-  override def close(): Unit = in.close()
+  override def close(): Unit = {
+    KinesisLiteSource.readerBytes.addAndGet(base + pos - startByte)
+    in.close()
+  }
 }

@@ -17,12 +17,15 @@ import graft.project.MetricProject
   * connector in prod; MemoryStream in tests) → the single-pass
   * `FastKayvee.unified` parse/route/project (a stateless narrow
   * `mapPartitions`, so the plan is incrementalizable untouched) →
-  * `foreachBatch` sink that groups by tag, retries, and appends failures to
-  * a parquet dead-letter path (`FailedLogsFile` analog).
+  * `foreachBatch` sink that delivers each source partition in place — per
+  * tag ≤100-record batches, as kbc's batcher forms them per shard consumer
+  * — retries, and appends failures to a parquet dead-letter path
+  * (`FailedLogsFile` analog).
   *
   * Scale: the only stateful operator is the windowed volume aggregation
-  * (state store, watermark-bounded); everything else is narrow → the
-  * pipeline scales with source partitions (Kinesis shards ≙ partitions).
+  * (state store, watermark-bounded); delivery has no exchange, so the
+  * pipeline scales with source partitions (Kinesis shards ≙ partitions)
+  * and a delivery task holds O(distinct tags × batchCount) rows.
   */
 object StreamPipeline {
 
@@ -36,9 +39,7 @@ object StreamPipeline {
       checkpointLocation: Option[String] = None, // KCL DynamoDB lease table analog
       batchCount: Int = 100, // BatchCount (main.go:56)
       // the four configured CW region clients (main.go:61-66)
-      cwRegions: Set[String] = Set("us-west-1", "us-west-2", "us-east-1", "us-east-2"),
-      // delivery fan-out width; None = spark.sql.shuffle.partitions
-      deliveryPartitions: Option[Int] = None
+      cwRegions: Set[String] = Set("us-west-1", "us-west-2", "us-east-1", "us-east-2")
   )
 
   /** Per-tag batch delivery target (Datadog/CloudWatch client analog).
@@ -70,7 +71,7 @@ object StreamPipeline {
   def metrics(raw: DataFrame, deployEnv: String): MetricProject.Projected =
     MetricProject.project(RouteEngine.withRoutes(LogParse.parse(raw, deployEnv)))
 
-  /** Wires the full fan-out sink: per-tag ≤100-record flushes (O14), DD
+  /** Wires the full fan-out sink: per-shard, per-tag ≤100-record flushes (O14), DD
     * submit with subset-narrowing retry (O19), per-region CW submit
     * (logged-not-retried), and replayable dead letters (O15) — parse-stage
     * failures (raw line + error) under `deadLetterPath/parse`, sink-stage
@@ -83,9 +84,10 @@ object StreamPipeline {
     * chain's variant/HOF expressions evaluate interpreted and its
     * three-branch plan is re-analysed in every micro-batch.
     *
-    * No driver-side collect: delivery is partition-local `mapPartitions`
-    * (see [[Delivery.deliverPartition]] for why that is the faithful analog
-    * of kbc's per-shard batching). Caller starts the returned writer. */
+    * No driver-side collect and no exchange: delivery is a `mapPartitions`
+    * over the source partitions (see [[Delivery.deliverPartition]] for why
+    * that is the faithful analog of kbc's per-shard batching). Caller
+    * starts the returned writer. */
   def deliver(
       raw: DataFrame,
       cfg: Config,
@@ -103,7 +105,8 @@ object StreamPipeline {
   }
 
   /** One micro-batch of the unified frame: spill parse-stage dead letters,
-    * then run executor-side delivery and spill whatever exhausted retries. */
+    * then deliver every partition where it is and spill whatever exhausted
+    * retries. */
   private def deliverBatch(
       unified: DataFrame,
       cfg: Config,
@@ -114,25 +117,12 @@ object StreamPipeline {
       val dead = unified.filter(col("kind") === "dead").select(col("raw"), col("err"))
       if (!dead.isEmpty) dead.write.mode("append").parquet(p + "/parse")
     }
-    // (tag, record_id) hash partitioning: every flush is single-tag and
-    // record-whole (dd + cw datums of one record land together, so the
-    // CW-after-dd-success coupling of SendBatch holds), while the dominant
-    // "default" tag still spreads across all partitions — repartition(tag)
-    // alone would funnel ~all traffic into one task.
-    val deliverable = unified
-      .filter(col("kind") =!= "dead")
-      .withColumn("rid", coalesce(col("dd.record_id"), col("cw.record_id")))
-    val failed = cfg.deliveryPartitions
-      .fold(deliverable.repartition(col("tag"), col("rid")))(
-        n => deliverable.repartition(n, col("tag"), col("rid")))
-      // (tag, rid)-sorted partitions make each record's rows consecutive,
-      // letting deliverPartition stream the iterator with O(batchCount)
-      // memory instead of buffering the whole partition
-      .sortWithinPartitions(col("tag"), col("rid"))
-      .mapPartitions { it =>
-        Delivery.deliverPartition(
-          it, sink, cwSink, cfg.retryAttempts, cfg.retryBaseMs, cfg.batchCount, cfg.cwRegions)
-      }(org.apache.spark.sql.Encoders.row(Delivery.failedSchema))
+    // delivered in place: each source partition (one per shard) batches
+    // its own rows per tag, as kbc does per shard consumer
+    val failed = unified.mapPartitions { it =>
+      Delivery.deliverPartition(
+        it, sink, cwSink, cfg.retryAttempts, cfg.retryBaseMs, cfg.batchCount, cfg.cwRegions)
+    }(org.apache.spark.sql.Encoders.row(Delivery.failedSchema))
     // exactly ONE action over `failed` runs the delivery side effects once
     // per partition (never .isEmpty here — a limit-1 probe would deliver a
     // partial prefix)

@@ -228,6 +228,79 @@ class KinesisLiteSpec extends SparkSpec {
     assert(read(2999L, 5000L) === expect.slice(2999, 3000))
   }
 
+  test("shard reader seeks to the driver's line index: full-scan sequences, O(batch) reads, restart") {
+    import graft.streaming.{KinesisLiteOffset, KinesisLiteShardPartition, KinesisLiteSource,
+      KinesisLiteStream}
+    val dir = Files.createTempDirectory("klite-seek").toString
+    val f = Paths.get(dir, "shard-0.txt")
+    val stride = KinesisLiteSource.IndexStride
+    val records = (0 until 5 * stride + 300).map {
+      case 1500 => "lone\rcr" // a lone \r is inside its record, not a line end
+      case 3001 => "\r"
+      case i    => s"rec-$i-" + ("z" * (i % 37))
+    }
+    Files.write(f, records.mkString("", "\n", "\n").getBytes("UTF-8"))
+    val lineBytes = records.map(_.getBytes("UTF-8").length + 1L)
+    def bytes(from: Long, to: Long): Long = lineBytes.slice(from.toInt, to.toInt).sum
+    val fullScan = records.zipWithIndex.map { case (l, i) => (l, i.toLong) }
+
+    def read(stream: KinesisLiteStream, p: KinesisLiteShardPartition): (Seq[(String, Long)], Long) = {
+      val before = KinesisLiteSource.readerBytes.get()
+      val r = stream.createReaderFactory().createReader(p)
+      val got =
+        try Iterator.continually(r.next()).takeWhile(identity)
+          .map(_ => (r.get().getUTF8String(0).toString, r.get().getLong(2))).toList
+        finally r.close()
+      (got, KinesisLiteSource.readerBytes.get() - before)
+    }
+    // drives the MicroBatchStream calls Spark makes per trigger
+    def batches(stream: KinesisLiteStream, from: KinesisLiteOffset, n: Int)
+        : (Seq[(String, Long)], KinesisLiteOffset) = {
+      var start = from
+      val out = Seq.newBuilder[(String, Long)]
+      (1 to n).foreach { _ =>
+        val end = stream.latestOffset(start, stream.getDefaultReadLimit)
+          .asInstanceOf[KinesisLiteOffset]
+        stream.planInputPartitions(start, end).foreach { ip =>
+          val p = ip.asInstanceOf[KinesisLiteShardPartition]
+          val (got, walked) = read(stream, p)
+          out ++= got
+          // seeks to the last indexed line start: walks at most one stride
+          // of prefix besides the batch's own bytes
+          assert(p.hintSeq <= p.startSeq && p.startSeq - p.hintSeq < stride, p.toString)
+          assert(walked === bytes(p.hintSeq, p.endSeq), p.toString)
+          assert(walked <= bytes(p.startSeq, p.endSeq) + bytes(p.startSeq - stride, p.startSeq),
+            p.toString)
+        }
+        start = end
+      }
+      (out.result(), start)
+    }
+
+    val first = new KinesisLiteStream(dir, "TRIM_HORIZON", 700)
+    val (got1, committed) =
+      batches(first, first.initialOffset().asInstanceOf[KinesisLiteOffset], 3)
+    // restart: a new stream resumes from the checkpointed offset JSON
+    val second = new KinesisLiteStream(dir, "TRIM_HORIZON", 700)
+    val (got2, end) = batches(second,
+      second.deserializeOffset(committed.json()).asInstanceOf[KinesisLiteOffset], 6)
+    assert(end.shards === Map("shard-0.txt" -> records.size.toLong))
+    assert(got1 ++ got2 === fullScan)
+
+    // a rewritten file invalidates the hint: the byte before it is no
+    // longer a line end, so the reader counts from byte 0 instead
+    val (hintSeq, hintByte) = KinesisLiteSource.seekHint(f.toFile, 2L * stride + 5)
+    assert(hintSeq === 2L * stride && hintByte === bytes(0, hintSeq))
+    val rewritten = "x" +: records.tail
+    Files.write(f, rewritten.mkString("", "\n", "\n").getBytes("UTF-8"))
+    val stale = KinesisLiteShardPartition(f.toString, "shard-0.txt", hintSeq + 5, hintSeq + 15,
+      hintSeq, hintByte)
+    val (afterRewrite, walked) = read(second, stale)
+    assert(afterRewrite === rewritten.zipWithIndex.map { case (l, i) => (l, i.toLong) }
+      .slice(hintSeq.toInt + 5, hintSeq.toInt + 15))
+    assert(walked === lineBytes.drop(1).take(hintSeq.toInt + 14).sum + 2)
+  }
+
   test("idle triggers re-read no shard bytes (driver I/O is O(appended), not O(stream))") {
     import graft.streaming.KinesisLiteSource
     KinesisLiteBuffers.rows.clear(); KinesisLiteBuffers.batchSizes.clear()

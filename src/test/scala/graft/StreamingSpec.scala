@@ -32,11 +32,13 @@ object SinkState {
   // every accepted row, keyed by tag (DD) or region (CW)
   val ddRows = new ConcurrentLinkedQueue[(String, Row)]()
   val cwRows = new ConcurrentLinkedQueue[(String, Row)]()
+  // every accepted submit in arrival order: (lane "dd" | "cw", tag, first field of each row)
+  val log = new ConcurrentLinkedQueue[(String, String, Seq[Any])]()
   def reset(failures: Int = 0, partial: Int = 0, cwFailures: Int = 0): Unit = {
     delivered.clear(); deliveredMetrics.clear(); seriesPoints.clear(); threads.clear()
     attempts.set(0); failuresToInject.set(failures); partialFailures.set(partial)
     cwDelivered.clear(); cwAttempts.set(0); cwFail.set(cwFailures)
-    ddRows.clear(); cwRows.clear()
+    ddRows.clear(); cwRows.clear(); log.clear()
   }
 }
 
@@ -61,6 +63,7 @@ class TestSink extends BatchSink {
         r.getAs[Long]("point_ts"), r.getAs[Double]("point_value")))
     }
     SinkState.delivered.add((tag, rows.size))
+    SinkState.log.add(("dd", tag, rows.map(_.get(0))))
   }
 }
 
@@ -72,6 +75,7 @@ class TestCwSink extends graft.streaming.Delivery.CwSink {
     SinkState.cwFail.set(math.max(SinkState.cwFail.get(), 0))
     SinkState.cwDelivered.add((region, rows.size))
     rows.foreach(r => SinkState.cwRows.add((region, r)))
+    SinkState.log.add(("cw", region, rows.map(_.get(0))))
   }
 }
 
@@ -179,10 +183,9 @@ class StreamingSpec extends SparkSpec {
     val ms = MemoryStream[String]
     val raw = ms.toDF().withColumnRenamed("value", "raw")
     val q = StreamPipeline
-      .deliver(raw,
-        Config("test-env", triggerInterval = "1 seconds", batchCount = 2,
-          // one partition: all 5 records hit one deliverPartition call
-          deliveryPartitions = Some(1)),
+      // one addData block is one source partition: all 5 records hit one
+      // deliverPartition call
+      .deliver(raw, Config("test-env", triggerInterval = "1 seconds", batchCount = 2),
         new TestSink)
       .start()
     try {
@@ -194,6 +197,115 @@ class StreamingSpec extends SparkSpec {
     val sizes = SinkState.delivered.asScala.toSeq.map(_._2).sorted
     assert(sizes === Seq(1, 2, 2))
     assert(SinkState.deliveredMetrics.asScala.toSeq.sorted === (1 to 5).map(i => s"kv.m$i"))
+  }
+
+  test("per-shard delivery: single-tag flushes of whole records, CW after the same records' DD") {
+    implicit val sqlCtx = spark.sqlContext
+    SinkState.reset()
+    def defaultLine(i: Int) =
+      s"""2017-08-15T18:39:07.000000+00:00 h production--app/arn[$i]: {"district":"d$i","_kvmeta":{"team":"t","routes":[{"type":"alerts","series":"m$i","dimensions":["district"],"stat_type":"counter","value_field":"value","rule":"r"}]}}"""
+    // two routes: two dd rows and one cw datum per record, all under the region tag
+    def regionLine(i: Int, region: String) =
+      s"""2017-08-15T18:39:07.000000+00:00 h production--app/arn[$i]: {"dim1":"d$i","region":"$region","value":$i,"_kvmeta":{"team":"t","routes":[{"type":"alerts","series":"ContainerExitCount","dimensions":["dim1"],"stat_type":"counter","value_field":"value","rule":"exit"},{"type":"alerts","series":"exit.other","dimensions":["dim1"],"stat_type":"gauge","value_field":"value","rule":"other"}]}}"""
+    val lines = (1 to 6).flatMap { i =>
+      Seq(defaultLine(i), regionLine(i, "us-west-2")) ++
+        (if (i % 2 == 0) Seq(regionLine(100 + i, "us-east-1")) else Nil)
+    }
+    val tagOf = lines.map { l =>
+      graft.fast.FastKayvee.recordId(l) ->
+        Seq("us-west-2", "us-east-1").find(r => l.contains(r)).getOrElse("default")
+    }.toMap
+    val ms = MemoryStream[String]
+    val raw = ms.toDF().withColumnRenamed("value", "raw")
+    val q = StreamPipeline
+      .deliver(raw, Config("test-env", triggerInterval = "1 seconds", batchCount = 2),
+        new TestSink, Some(new TestCwSink))
+      .start()
+    try {
+      ms.addData(lines: _*) // one block = one source partition, tags interleaved
+      q.processAllAvailable()
+    } finally q.stop()
+
+    val log = SinkState.log.asScala.toIndexedSeq.map { case (lane, tag, ids) =>
+      (lane, tag, ids.map(_.asInstanceOf[Long]))
+    }
+    val dd = log.filter(_._1 == "dd")
+    // every submit is single-tag with ≤ batchCount records
+    dd.foreach { case (_, tag, ids) =>
+      assert(ids.forall(tagOf(_) == tag), s"mixed-tag submit under $tag: $log")
+      assert(ids.distinct.size <= 2, s"over batchCount: $log")
+    }
+    // every record delivered, and whole: all its dd rows in exactly one submit
+    assert(dd.flatMap(_._3).distinct.toSet === tagOf.keySet)
+    tagOf.keys.foreach { rid =>
+      assert(dd.count(_._3.contains(rid)) === 1, s"record $rid split across flushes: $log")
+    }
+    assert(dd.filter(_._2 == "default").map(_._3.size) === Seq(2, 2, 2))
+    // region records have 2 dd rows each: 2 records = 4 rows per full flush
+    assert(dd.filter(_._2 == "us-west-2").map(_._3.size) === Seq(4, 4, 4))
+    assert(dd.filter(_._2 == "us-east-1").map(_._3.size).sorted === Seq(2, 4))
+    // each CW put carries exactly the records of the DD submit just before it
+    val cwAt = log.indices.filter(log(_)._1 == "cw")
+    assert(cwAt.size === 5, log.toString)
+    cwAt.foreach { j =>
+      val (_, region, ids) = log(j)
+      assert(j > 0 && log(j - 1)._1 == "dd" && log(j - 1)._2 == region, s"cw before its dd: $log")
+      assert(ids.toSet === log(j - 1)._3.toSet, s"cw put split from its dd flush: $log")
+    }
+  }
+
+  test("deliver writes no shuffle bytes: delivery stays in the source partitions") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart,
+      SparkListenerTaskEnd}
+    implicit val sqlCtx = spark.sqlContext
+    SinkState.reset()
+    val sc = spark.sparkContext
+    val ms = MemoryStream[String]
+    // two blocks before the start: the first batch has two source partitions
+    ms.addData(golden, "not a log line at all")
+    ms.addData(regionLine)
+    val raw = ms.toDF().withColumnRenamed("value", "raw")
+    val fence = java.util.UUID.randomUUID().toString
+    val stageQuery = new java.util.concurrent.ConcurrentHashMap[Int, String]()
+    val fenceJobs = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val fenced = new java.util.concurrent.CountDownLatch(1)
+    // (query id, shuffle bytes written) of every task of a streaming query
+    val taskEnds = new ConcurrentLinkedQueue[(String, Long)]()
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit = {
+        val props = Option(js.properties)
+        props.flatMap(p => Option(p.getProperty("sql.streaming.queryId")))
+          .foreach(id => js.stageIds.foreach(stageQuery.put(_, id)))
+        if (props.exists(_.getProperty("graft.test.fence") == fence)) fenceJobs.add(js.jobId)
+      }
+      override def onTaskEnd(te: SparkListenerTaskEnd): Unit =
+        Option(stageQuery.get(te.stageId)).filter(_ => te.taskMetrics != null).foreach { id =>
+          taskEnds.add((id, te.taskMetrics.shuffleWriteMetrics.bytesWritten))
+        }
+      override def onJobEnd(je: SparkListenerJobEnd): Unit =
+        if (fenceJobs.contains(je.jobId)) fenced.countDown()
+    }
+    sc.addSparkListener(listener)
+    val queryId =
+      try {
+        // no deadLetterPath: its `dead.isEmpty` probe gathers one row per
+        // partition through a single-partition exchange, outside delivery
+        val q = StreamPipeline
+          .deliver(raw, Config("test-env", triggerInterval = "1 seconds"),
+            new TestSink, Some(new TestCwSink))
+          .start()
+        try q.processAllAvailable() finally q.stop()
+        // the listener bus is FIFO: once the fence job's end arrives, every
+        // task end of the delivery batch before it has been seen
+        sc.setLocalProperty("graft.test.fence", fence)
+        try sc.parallelize(Seq(1), 1).count() finally sc.setLocalProperty("graft.test.fence", null)
+        assert(fenced.await(30, java.util.concurrent.TimeUnit.SECONDS), "listener bus never drained")
+        q.id.toString
+      } finally sc.removeSparkListener(listener)
+    val ours = taskEnds.asScala.toSeq.filter(_._1 == queryId)
+    assert(SinkState.delivered.asScala.map(_._2).sum === 2)
+    assert(ours.size >= 2, s"expected a task per source partition, saw ${ours.size}")
+    assert(ours.map(_._2).sum === 0L, s"deliver wrote ${ours.map(_._2).sum} shuffle bytes")
   }
 
   test("parse/projection failures land under deadLetterPath/parse with the raw record") {
@@ -310,10 +422,9 @@ class StreamingSpec extends SparkSpec {
     val ms = MemoryStream[String]
     val raw = ms.toDF().withColumnRenamed("value", "raw")
     val q = StreamPipeline
-      .deliver(raw,
-        Config("test-env", triggerInterval = "1 seconds", retryBaseMs = 1,
-          // one partition so all 4 rows form one submit batch
-          deliveryPartitions = Some(1)),
+      // one addData block is one source partition, so all 4 rows form one
+      // submit batch
+      .deliver(raw, Config("test-env", triggerInterval = "1 seconds", retryBaseMs = 1),
         new TestSink)
       .start()
     try {
