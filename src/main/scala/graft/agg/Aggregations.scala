@@ -15,7 +15,7 @@ import org.apache.spark.sql.functions._
   */
 object Aggregations {
 
-  private def unknown(c: Column): Column =
+  private[graft] def unknown(c: Column): Column =
     coalesce(when(c =!= "", c), lit("unknown"))
 
   /** Per-(env,app,team) log volume: count + byte size
@@ -65,7 +65,8 @@ object Aggregations {
     * ([[metaCounts]] output): vol groups fan into the two volume series
     * (tags `env/application/team`), route groups into the route-count
     * series (tags `env/application/route`) — `metrics.go:104-157`. One
-    * scan, one explode; same output schema as [[metaSeries]]. */
+    * scan, one explode; rows are (metric, type, tags_str, point_ts,
+    * point_value). */
   def metaSeriesUnified(grouped: DataFrame): DataFrame = {
     val tagsStr = concat_ws(
       ",",

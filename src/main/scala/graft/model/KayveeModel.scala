@@ -34,16 +34,6 @@ object KayveeModel {
     )
   )
 
-  /** Typed projection of the JSON body for the fields the pipeline reads
-    * structurally (everything else flows through the variant map).
-    */
-  val bodySchema: StructType = StructType(
-    Seq(
-      StructField("team", StringType),
-      StructField("_kvmeta", kvmetaSchema)
-    )
-  )
-
   /** Default dimensions appended to every kvmeta route
     * (`alerts_consumer.go:23`).
     */

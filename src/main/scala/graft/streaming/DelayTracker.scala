@@ -7,11 +7,12 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
 /** O17 with exact reference semantics (`delay.go:15-39`): a lock-free
   * atomic max of pipeline delay, swap-reset and emitted every interval.
   *
-  * The plain windowed-max version is in Aggregations/StreamPipeline; this
-  * is the `flatMapGroupsWithState` formulation for when the *reset*
-  * contract matters: each emitted gauge covers exactly one interval, state
-  * is a single long per key (bounded), and a processing-time timeout
-  * triggers the swap — the Spark analog of the 15-second ticker goroutine.
+  * The one streaming formulation of the gauge (the batch max is
+  * `Aggregations.maxDelay`), on `flatMapGroupsWithState` so it runs on the
+  * default state store provider. It keeps the *reset* contract: each
+  * emitted gauge covers exactly one interval, state is a single long per
+  * key (bounded), and a processing-time timeout triggers the swap — the
+  * Spark analog of the 15-second ticker goroutine.
   */
 object DelayTracker {
 

@@ -156,7 +156,8 @@ object Delivery {
   }
 
   /** Submits `rows` with exponential-backoff retry
-    * (`alerts_consumer.go:257-268`); a `PartialSendBatchError` narrows the
+    * (`alerts_consumer.go:257-268`; the meta lane reuses it, as
+    * `metrics.go:42` reuses that policy); a `PartialSendBatchError` narrows the
     * resubmission to the failed subset. Returns the rows that ultimately
     * failed (empty = fully delivered). */
   def submitWithRetry(

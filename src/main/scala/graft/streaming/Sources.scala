@@ -114,20 +114,15 @@ object Sources {
       .selectExpr("CAST(data AS STRING) AS raw")
 
   /** The emulated in-sandbox source ([[KinesisLiteSource]]) driven by the
-    * SAME KCL envelope as the production reader: `streamDir` stands in
-    * for the stream name, the rest of the mapping is identical (position,
-    * fetch cap). Output schema adds (shard_id, sequence) alongside `raw`;
-    * the pipeline consumes `raw` either way. */
-  def kinesisLite(spark: SparkSession, cfg: KclConfig, streamDir: String): DataFrame = {
-    require(
-      Set("TRIM_HORIZON", "LATEST").contains(cfg.initialPositionInStream),
-      s"initialPositionInStream must be TRIM_HORIZON or LATEST, got ${cfg.initialPositionInStream}")
+    * SAME reader options as the production reader ([[kinesisOptions]]),
+    * plus `path`: `streamDir` stands in for the stream name; kinesis-lite
+    * reads the position and the fetch cap and ignores the other keys.
+    * Output schema adds (shard_id, sequence) alongside `raw`; the pipeline
+    * consumes `raw` either way. */
+  def kinesisLite(spark: SparkSession, cfg: KclConfig, streamDir: String): DataFrame =
     spark.readStream.format("kinesis-lite")
-      .option("path", streamDir)
-      .option("startingPosition", cfg.initialPositionInStream)
-      .option("maxRecordsPerFetch", cfg.maxRecords.toString)
+      .options(kinesisOptions(cfg) + ("path" -> streamDir))
       .load()
-  }
 
   /** File-drop source — the local/integration-test stand-in; rate-limited
     * ingest via maxFilesPerTrigger (READ_RATE_LIMIT analog). */

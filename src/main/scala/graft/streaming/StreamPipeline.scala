@@ -1,8 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 
 import graft.parse.LogParse
 import graft.routes.RouteEngine
@@ -22,10 +22,12 @@ import graft.project.MetricProject
   * — retries, and appends failures to a parquet dead-letter path
   * (`FailedLogsFile` analog).
   *
-  * Scale: the only stateful operator is the windowed volume aggregation
-  * (state store, watermark-bounded); delivery has no exchange, so the
-  * pipeline scales with source partitions (Kinesis shards ≙ partitions)
-  * and a delivery task holds O(distinct tags × batchCount) rows.
+  * Scale: delivery is stateless and has no exchange, so the pipeline
+  * scales with source partitions (Kinesis shards ≙ partitions) and a
+  * delivery task holds O(distinct tags × batchCount) rows. The only
+  * stateful operator is the meta lane's [[metaAgg]]: one watermark-bounded
+  * 1-minute aggregation (state store) feeding both the volume and the
+  * route-count series.
   */
 object StreamPipeline {
 
@@ -47,24 +49,6 @@ object StreamPipeline {
     * backoff and dead-lettered on exhaustion. */
   trait BatchSink extends Serializable {
     def submit(tag: String, rows: Seq[Row]): Unit
-  }
-
-  /** 5-attempt exponential backoff, 50 ms base — `alerts_consumer.go:257`,
-    * `metrics.go:42`. */
-  def withRetry[T](attempts: Int, baseMs: Long)(f: => T): T = {
-    var delay = baseMs
-    var left = attempts
-    while (true) {
-      try return f
-      catch {
-        case e: Exception =>
-          left -= 1
-          if (left <= 0) throw e
-          Thread.sleep(delay)
-          delay *= 2
-      }
-    }
-    throw new IllegalStateException("unreachable")
   }
 
   /** The full metric pipeline on a streaming (or batch) raw-line frame. */
@@ -132,43 +116,6 @@ object StreamPipeline {
     }
   }
 
-  /** O16 streaming: watermarked 1-minute tumbling volume aggregation in
-    * update mode — the state store replaces the reference's double-buffered
-    * maps (and survives restarts, which the reference's in-memory maps do
-    * not; SURVEY.md §7.4 notes the deviation). */
-  def volumeAgg(raw: DataFrame, deployEnv: String, watermark: String = "2 minutes"): DataFrame = {
-    val parsed = LogParse.parse(raw, deployEnv).withWatermark("ts", watermark)
-    parsed
-      .groupBy(
-        window(col("ts"), "1 minute").as("w"),
-        coalesce(when(col("container_env") =!= "", col("container_env")), lit("unknown")).as("env"),
-        coalesce(when(col("container_app") =!= "", col("container_app")), lit("unknown")).as("application"),
-        coalesce(when(col("team") =!= "", col("team")), lit("unknown")).as("team")
-      )
-      .agg(count(lit(1)).as("log_volume_count"), sum(col("nbytes")).as("log_volume_size"))
-      .select(col("w.start").as("window_start"), col("env"), col("application"), col("team"),
-        col("log_volume_count"), col("log_volume_size"))
-  }
-
-  /** O16b streaming: watermarked 1-minute tumbling route counts over ALL
-    * kvmeta route types (`metrics.go:63-67`) in update mode — the second
-    * half of the reference's meta-metrics aggregator goroutine. */
-  def routeCountsAgg(raw: DataFrame, deployEnv: String, watermark: String = "2 minutes"): DataFrame = {
-    val routed = RouteEngine.withRoutes(LogParse.parse(raw, deployEnv))
-      .withWatermark("ts", watermark)
-    routed
-      .select(
-        col("ts"),
-        coalesce(when(col("container_env") =!= "", col("container_env")), lit("unknown")).as("env"),
-        coalesce(when(col("container_app") =!= "", col("container_app")), lit("unknown")).as("application"),
-        explode(col("rule_names")).as("route")
-      )
-      .groupBy(window(col("ts"), "1 minute").as("w"), col("env"), col("application"), col("route"))
-      .agg(count(lit(1)).as("log_route_count"))
-      .select(col("w.start").as("window_start"), col("env"), col("application"), col("route"),
-        col("log_route_count"))
-  }
-
   /** O16+O16b streaming, fused: ONE watermarked 1-minute aggregation over
     * ONE parse of the source feeds both the volume and route-count maps —
     * the Spark shape of the reference's single aggregator goroutine
@@ -178,8 +125,7 @@ object StreamPipeline {
     * single hash agg on (window, kind, env, application, grp). Returns the
     * grouped frame (window_start TimestampType). */
   def metaAgg(raw: DataFrame, deployEnv: String, watermark: String = "2 minutes"): DataFrame = {
-    def unknown(c: org.apache.spark.sql.Column) =
-      coalesce(when(c =!= "", c), lit("unknown"))
+    import graft.agg.Aggregations.unknown
     val routed = RouteEngine.withRoutes(LogParse.parse(raw, deployEnv))
       .withWatermark("ts", watermark)
     val rows = routed.select(
@@ -204,8 +150,10 @@ object StreamPipeline {
   /** Streaming `shipMetrics` (`metrics.go:91-172`): the fused meta
     * aggregate ([[metaAgg]] — one source reader, one parse, one shuffle)
     * projected into DD series rows and submitted per trigger under tag
-    * "meta" — retried 5×, then logged-not-fatal (`metrics.go:159-171`;
-    * meta metrics are never dead-lettered).
+    * "meta" with the delivery lane's retry ([[Delivery.submitWithRetry]]:
+    * 5× backoff, a `PartialSendBatchError` narrows the resubmission), then
+    * logged-not-fatal (`metrics.go:159-171`; meta metrics are never
+    * dead-lettered).
     *
     * Emission semantics, chosen by `exactlyOnce`:
     *  - false (default, update mode): a window touched by several
@@ -239,19 +187,13 @@ object StreamPipeline {
         val baseMs = cfg.retryBaseMs
         batch.foreachPartition { (rows: Iterator[Row]) =>
           val buf = rows.toSeq
-          if (buf.nonEmpty)
-            try withRetry(attempts, baseMs)(sink.submit("meta", buf))
-            catch {
-              case e: Exception =>
-                org.slf4j.LoggerFactory.getLogger("graft.streaming.StreamPipeline")
-                  .warn(s"failed-sending-volumes: ${e.getMessage}")
-            }
+          // an empty partition submits nothing and returns Nil
+          val failed = Delivery.submitWithRetry(sink, "meta", buf, attempts, baseMs)
+          if (failed.nonEmpty)
+            org.slf4j.LoggerFactory.getLogger("graft.streaming.StreamPipeline")
+              .warn(s"failed-sending-volumes: ${failed.size} of ${buf.size} series rows " +
+                s"not accepted after $attempts attempts")
         }
       }
   }
-
-  /** O17 streaming: max pipeline delay per trigger via `observe` — the
-    * lock-free-atomic analog; read from QueryProgress events. */
-  def withDelayObserver(dd: DataFrame): DataFrame =
-    dd.observe("delay", max(unix_timestamp(current_timestamp()) - col("point_ts")).as("max_delay_sec"))
 }

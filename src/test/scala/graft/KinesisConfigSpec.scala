@@ -99,6 +99,10 @@ class KinesisConfigSpec extends AnyFunSuite {
       Map.empty)
     val e = intercept[IllegalArgumentException](Sources.kinesisOptions(cfg))
     assert(e.getMessage.contains("TRIM_HORIZON or LATEST"))
+    // kinesis-lite goes through the same mapping, so the same check
+    val lite = intercept[IllegalArgumentException](
+      Sources.kinesisLite(SharedSpark.spark, cfg, "/nonexistent-stream"))
+    assert(lite.getMessage.contains("TRIM_HORIZON or LATEST"))
   }
 
   test("unresolvable placeholders surface as-is (missing env is visible, not silent)") {

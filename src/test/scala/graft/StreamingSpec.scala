@@ -463,18 +463,18 @@ class StreamingSpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     val ms = MemoryStream[String]
     val raw = ms.toDF().withColumnRenamed("value", "raw")
-    val agg = StreamPipeline.volumeAgg(raw, "test-env")
+    val agg = StreamPipeline.metaAgg(raw, "test-env")
     val q = agg.writeStream.format("memory").queryName("vols").outputMode("update").start()
     try {
       def line(sec: Int) =
         f"""2017-08-15T18:39:$sec%02d.000000+00:00 h production--app-a/arn[1]: {"_kvmeta":{"team":"team-x","routes":[]}}"""
       ms.addData(line(1), line(2), line(3))
       q.processAllAvailable()
-      val rows = spark.sql("SELECT * FROM vols").collect()
+      val rows = spark.sql("SELECT * FROM vols WHERE kind = 'vol'").collect()
       assert(rows.length === 1)
-      assert(rows.head.getAs[Long]("log_volume_count") === 3)
+      assert(rows.head.getAs[Long]("cnt") === 3)
       assert(rows.head.getAs[String]("application") === "app-a")
-      assert(rows.head.getAs[String]("team") === "team-x")
+      assert(rows.head.getAs[String]("grp") === "team-x")
     } finally q.stop()
   }
 
@@ -734,14 +734,14 @@ class StreamingSpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     val ms = MemoryStream[String]
     val raw = ms.toDF().withColumnRenamed("value", "raw")
-    val agg = StreamPipeline.routeCountsAgg(raw, "test-env")
+    val agg = StreamPipeline.metaAgg(raw, "test-env")
     val q = agg.writeStream.format("memory").queryName("rcounts").outputMode("update").start()
     try {
       def line(sec: Int) =
         f"""2017-08-15T18:39:$sec%02d.000000+00:00 h production--app-b/arn[1]: {"_kvmeta":{"team":"t","routes":[{"type":"analytics","series":"x","rule":"ana"},{"type":"alerts","series":"s","dimensions":[],"stat_type":"counter","value_field":"","rule":"al"}]}}"""
       ms.addData(line(1), line(2))
       q.processAllAvailable()
-      val rows = spark.sql("SELECT route, log_route_count FROM rcounts").collect()
+      val rows = spark.sql("SELECT grp, cnt FROM rcounts WHERE kind = 'route'").collect()
         .map(r => r.getString(0) -> r.getLong(1)).toMap
       // analytics routes count too (metrics.go:63-67), not just alerts
       assert(rows === Map("ana" -> 2L, "al" -> 2L))
@@ -799,6 +799,47 @@ class StreamingSpec extends SparkSpec {
       q.processAllAvailable()
       assert(countsFor(m39) === Seq(3.0))
     } finally q.stop()
+  }
+
+  test("meta-series shipping: failures retried, narrowed, then logged; never fatal or dead-lettered") {
+    implicit val sqlCtx = spark.sqlContext
+    def line(min: Int) =
+      f"""2017-08-15T18:$min%02d:07.000000+00:00 h production--app-f/arn[1]: {"_kvmeta":{"team":"tf","routes":[{"type":"analytics","series":"x","rule":"ana"}]}}"""
+    val all = Seq(
+      "kinesis_alerts_consumer.log_route_count",
+      "kinesis_alerts_consumer.log_volume_count",
+      "kinesis_alerts_consumer.log_volume_size")
+    val dlq = Files.createTempDirectory("graft-meta-dlq").resolve("failed")
+    val ms = MemoryStream[String]
+    SinkState.reset()
+    val q = StreamPipeline.shipMetaSeries(
+      ms.toDF().withColumnRenamed("value", "raw"),
+      Config("test-env", triggerInterval = "1 seconds", retryBaseMs = 1,
+        deadLetterPath = Some(dlq.toString)),
+      new TestSink).start()
+    // one record per phase, each in a later 1-minute window, so a trigger
+    // ships only that window's three series
+    def ship(min: Int): Seq[String] = {
+      ms.addData(line(min))
+      q.processAllAvailable()
+      SinkState.deliveredMetrics.asScala.toSeq.sorted
+    }
+    try {
+      SinkState.reset(failures = 2) // fails twice, then accepts
+      assert(ship(39) === all)
+      // the two failures plus one accepted submit per non-empty partition
+      assert(SinkState.attempts.get() === 2 + SinkState.delivered.size)
+      SinkState.reset(partial = 1) // the first multi-row submit rejects its last row
+      // a whole-batch resubmit would ship the accepted rows twice
+      assert(ship(40) === all)
+      SinkState.reset(failures = 1000) // every attempt fails
+      assert(ship(41).isEmpty)
+      assert(SinkState.attempts.get() >= 5)
+      assert(q.isActive && q.exception.isEmpty) // logged, not fatal
+      SinkState.reset()
+      assert(ship(42) === all) // the next trigger ships as usual
+    } finally q.stop()
+    assert(!Files.exists(dlq)) // meta points are never dead-lettered
   }
 
   test("fused metaAgg ≡ separate volume + route-count aggregations") {
