@@ -8,6 +8,9 @@ object Verify {
     // args: sfDir outDir [onlyQuery...] — the optional names restrict the
     // dump to those queries (local iteration; the driver passes none)
     val (Array(sfDir, outDir), only) = args.splitAt(2)
+    // a misspelt name would otherwise dump nothing and check nothing
+    val unknown = only.filterNot(SparkEntry.queries.contains)
+    require(unknown.isEmpty, s"not declared queries: ${unknown.mkString(", ")}")
     // Refuse an output dir whose basename collides with a declared query:
     // `runMain graft.Verify sf0.01 q_agg_mode` once committed a stray
     // `q_agg_mode/oracle_sql.json` at the repo root (round-6 verdict item).
@@ -70,7 +73,10 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
+    // oracles for the dumped queries only, so check_oracle.py checks
+    // exactly what was dumped
     val json = SparkEntry.oracleSql
+      .filter { case (k, _) => only.isEmpty || only.contains(k) }
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     Files.writeString(Paths.get(s"$outDir/timings.json"),

@@ -17,14 +17,19 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
   *
   * Why it exists: the reference's record pipeline is genuinely row-at-a-time
   * imperative work (JSON parse + per-route map lookups). The declarative
-  * chain is the Catalyst-visible implementation the batch lanes use and the
-  * parity reference, but higher-order-function + variant expressions
-  * evaluate interpreted in Spark, costing ~25-40µs/line/core; this
-  * `mapPartitions` lane with Jackson runs the same semantics at ~3-5µs —
-  * on par with the Go reference — and is what the hot declared queries and
-  * the streaming wrapper (`StreamPipeline.deliver`, via [[unified]]) use.
-  * This is the sanctioned "genuine per-partition imperative logic" case:
-  * one JSON parse per record, zero shuffles, streaming-friendly.
+  * chain is Catalyst-visible and the parity reference, but its
+  * higher-order-function + variant expressions evaluate interpreted in
+  * Spark; streamed on alertbench's backlog_drain, this Jackson
+  * `mapPartitions` lane measured 3.5× the declarative chain's throughput
+  * (README). It is the record path of the streaming wrapper
+  * (`StreamPipeline.deliver`, via [[unified]]) and of every declared
+  * kayvee query except q_parse_enrich and q_max_delay.
+  *
+  * One pass per output shape: [[unified]] (dd + cw + dead rows),
+  * [[meta]] (volume + route-count rows), [[status]] (per-record
+  * classification) and [[routes]] (determined routes). This is the
+  * sanctioned "genuine per-partition imperative logic" case: one JSON parse
+  * per record, zero shuffles, streaming-friendly.
   */
 object FastKayvee {
 
@@ -286,55 +291,6 @@ object FastKayvee {
     Right(out.toSeq)
   }
 
-  /** Datadog-series lane: raw lines → DD rows (valid records only). */
-  def dd(raw: DataFrame, deployEnv: String): Dataset[DD] = {
-    val spark = raw.sparkSession
-    import spark.implicits._
-    raw.select(raw.columns.head).as[String].mapPartitions { it =>
-      val mapper = new ObjectMapper
-      it.flatMap { line =>
-        parseLine(line, deployEnv, mapper) match {
-          case Some(p) => encode(p).getOrElse(Nil)
-          case None    => Nil
-        }
-      }
-    }
-  }
-
-  /** One volume-accounting row per parsed record (O16 input). */
-  final case class VolumeRow(
-      window_start: Long, // minute bucket, epoch seconds
-      env: String,
-      application: String,
-      team: String,
-      nbytes: Long
-  )
-
-  /** Volume lane: raw lines → per-record accounting rows ("unknown"
-    * null-fills per `metrics.go:49-57`); group downstream. */
-  def volume(raw: DataFrame, deployEnv: String): Dataset[VolumeRow] = {
-    val spark = raw.sparkSession
-    import spark.implicits._
-    raw.select(raw.columns.head).as[String].mapPartitions { it =>
-      val mapper = new ObjectMapper
-      it.flatMap { line =>
-        parseLine(line, deployEnv, mapper).map { p =>
-          VolumeRow(
-            // floorDiv: declarative date_trunc floors toward -inf, so
-            // pre-epoch timestamps must too (-61s → -120, not -60)
-            Math.floorDiv(p.tsSec, 60) * 60,
-            Option(p.containerEnv).filter(_.nonEmpty).getOrElse("unknown"),
-            Option(p.containerApp).filter(_.nonEmpty).getOrElse("unknown"),
-            p.team.getOrElse("unknown"),
-            // codepoint count, not UTF-16 units — declarative length()
-            // counts codepoints, diverging on supplementary characters
-            line.codePointCount(0, line.length).toLong
-          )
-        }
-      }
-    }
-  }
-
   /** One determined route, pre-projection (O4-O8 output). `record_key` is
     * the value of `keyField` in the JSON body when numeric (join key for
     * route-level analyses); -1 when absent. */
@@ -389,55 +345,6 @@ object FastKayvee {
     }
   }
 
-  /** CloudWatch lane: allow-listed series w/ resolvable region. */
-  def cw(raw: DataFrame, deployEnv: String): Dataset[CW] = {
-    val spark = raw.sparkSession
-    import spark.implicits._
-    raw.select(raw.columns.head).as[String].mapPartitions { it =>
-      val mapper = new ObjectMapper
-      it.flatMap { line =>
-        parseLine(line, deployEnv, mapper).toSeq.flatMap { p =>
-          if (encode(p).isLeft) Nil else cwRows(p)
-        }
-      }
-    }
-  }
-
-  /** One row per (record, kvmeta route rule) for the route-count lane —
-    * ALL kvmeta route types count, not just alerts (`metrics.go:63-67`,
-    * `alerts_consumer.go:90`); env/app are "unknown"-filled. */
-  final case class RouteNameRow(
-      window_start: Long,
-      env: String,
-      application: String,
-      route: String
-  )
-
-  /** Route-count lane (O16b): raw lines → one row per kvmeta route name,
-    * ts-parseable records only (the reference's recordMetrics runs after a
-    * successful ParseAndEnhance). Imperative mirror of
-    * Aggregations.routeCounts over the declarative rule_names column. */
-  def routeNames(raw: DataFrame, deployEnv: String): Dataset[RouteNameRow] = {
-    val spark = raw.sparkSession
-    import spark.implicits._
-    raw.select(raw.columns.head).as[String].mapPartitions { it =>
-      val mapper = new ObjectMapper
-      it.flatMap { line =>
-        parseLine(line, deployEnv, mapper).toSeq.flatMap { p =>
-          val names = ArrayBuffer.empty[String]
-          if (p.body != null) {
-            val routes = p.body.path("_kvmeta").path("routes")
-            if (routes.isArray)
-              routes.elements.asScala.foreach(r => names += r.path("rule").asText(null))
-          }
-          val env = Option(p.containerEnv).filter(_.nonEmpty).getOrElse("unknown")
-          val app = Option(p.containerApp).filter(_.nonEmpty).getOrElse("unknown")
-          names.map(n => RouteNameRow(Math.floorDiv(p.tsSec, 60) * 60, env, app, n))
-        }
-      }
-    }
-  }
-
   /** One row of the single-pass meta lane: the reference's ONE aggregator
     * goroutine consumes each record once and feeds BOTH meta maps
     * (`metrics.go:73-89`) — this row is that record's contribution to
@@ -455,9 +362,12 @@ object FastKayvee {
   )
 
   /** Single-pass meta lane (O16 + O16b fused): raw lines → one vol row plus
-    * one route row per kvmeta route, per ts-parseable record. Semantically
-    * `volume(raw) ∪ routeNames(raw)` but with ONE parse of the corpus
-    * (parity: FastKayveeParitySpec). */
+    * one route row per kvmeta route, per ts-parseable record; ONE parse of
+    * the corpus feeds both aggregates (parity vs the declarative
+    * `Aggregations.volumeByEnvAppTeam`/`routeCounts`: FastKayveeParitySpec).
+    * `window_start` uses floorDiv because declarative date_trunc floors
+    * toward -inf (-61 s → -120, not -60); `nbytes` counts codepoints, not
+    * UTF-16 units, as declarative length() does. */
   def meta(raw: DataFrame, deployEnv: String): Dataset[MetaRow] = {
     val spark = raw.sparkSession
     import spark.implicits._

@@ -46,14 +46,25 @@ object KayveeQueries {
     )
   }
 
-  /** Datadog-series lane. The declared queries use the imperative
-    * FastKayvee lane (cross-checked against the declarative chain by
-    * FastKayveeParitySpec) — same semantics; streamed on alertbench's
-    * backlog_drain it measured 3.5× the declarative chain's throughput
-    * (README).
-    */
+  /** One kind ("dd" | "cw") of the rows `FastKayvee.unified` delivers —
+    * the streaming deliver query's record pass, cross-checked against the
+    * declarative chain by FastKayveeParitySpec. */
+  private def unified(df: DataFrame, kind: String): DataFrame =
+    graft.fast.FastKayvee.unified(df, "prod").toDF().filter(col("kind") === kind)
+
+  /** Datadog-series lane: the dd rows of [[unified]], flattened to
+    * (metric, type, tags, point_ts, point_value, rule, tag). */
   private def dd(df: DataFrame): DataFrame =
-    graft.fast.FastKayvee.dd(df, "prod").toDF()
+    unified(df, "dd").select(col("dd.metric"), col("dd.type"), col("dd.tags"),
+      col("dd.point_ts"), col("dd.point_value"), col("dd.rule"), col("tag"))
+
+  /** One kind ("vol" | "route") of the fused meta aggregation
+    * (`Aggregations.metaCounts` over `FastKayvee.meta`), the shape
+    * q_meta_series ships: (kind, window_start, env, application, grp, cnt,
+    * sz). */
+  private def metaCounts(raw: DataFrame, kind: String): DataFrame =
+    Aggregations.metaCounts(
+      graft.fast.FastKayvee.meta(raw, "prod").toDF().filter(col("kind") === kind))
 
   private def tagsStr(df: DataFrame): DataFrame =
     df.withColumn("tags_str", concat_ws(",", col("tags")))
@@ -268,15 +279,15 @@ object KayveeQueries {
             "\"stat_type\":\"counter\",\"value_field\":\"value\",\"rule\":\"exit\"}]}}")
         ).otherwise(lit("}"))
       )
-      graft.fast.FastKayvee.cw(lines(s, dir, body), "prod")
+      unified(lines(s, dir, body), "cw")
         .select(
-          col("metric_name"),
-          concat_ws(",", zip_with(col("dim_names"), col("dim_values"),
+          col("cw.metric_name").as("metric_name"),
+          concat_ws(",", zip_with(col("cw.dim_names"), col("cw.dim_values"),
             (n, v) => concat(n, lit("="), v))).as("dims_str"),
-          col("value"),
-          col("ts_sec"),
-          col("region_tag"),
-          col("storage_resolution")
+          col("cw.value").as("value"),
+          col("cw.ts_sec").as("ts_sec"),
+          col("tag").as("region_tag"),
+          col("cw.storage_resolution").as("storage_resolution")
         )
     },
 
@@ -327,9 +338,9 @@ object KayveeQueries {
         lit("{\"event_id\":"), col("event_id"),
         lit(",\"_kvmeta\":{\"team\":\"team-"), col("user_id") % 7, lit("\",\"routes\":[]}}")
       )
-      graft.fast.FastKayvee.volume(lines(s, dir, body), "prod")
-        .groupBy(col("window_start"), col("env"), col("application"), col("team"))
-        .agg(count(lit(1)).as("log_volume_count"), sum(col("nbytes")).as("log_volume_size"))
+      metaCounts(lines(s, dir, body), "vol")
+        .select(col("window_start"), col("env"), col("application"), col("grp").as("team"),
+          col("cnt").as("log_volume_count"), col("sz").as("log_volume_size"))
     },
 
     // O16b — per-(app,env,rule) route counts over ALL kvmeta route types
@@ -365,11 +376,9 @@ object KayveeQueries {
             "\"rule\":\"evt\"}]}}")
         ).as("raw")
       )
-      // FastKayvee route-name lane (parity vs Aggregations.routeCounts in
-      // FastKayveeParitySpec) + one hash agg
-      graft.fast.FastKayvee.routeNames(raw, "prod")
-        .groupBy(col("window_start"), col("env"), col("application"), col("route"))
-        .agg(count(lit(1)).as("log_route_count"))
+      metaCounts(raw, "route")
+        .select(col("window_start"), col("env"), col("application"), col("grp").as("route"),
+          col("cnt").as("log_route_count"))
     },
 
     // shipMetrics series projection (`metrics.go:91-157`): the two meta

@@ -69,9 +69,11 @@ class FastKayveeParitySpec extends SparkSpec {
       .collect()
       .map(r => (r.getString(0), r.getString(1), r.getAs[Seq[String]](2).mkString("|"), r.getLong(3), r.getDouble(4), r.getString(5), r.getString(6)))
       .sortBy(_.toString)
-    val fast = FastKayvee.dd(raw, "test-env")
+    // the dd rows of the unified delivery pass
+    val fast = FastKayvee.unified(raw, "test-env")
       .collect()
-      .map(d => (d.metric, d.`type`, d.tags.mkString("|"), d.point_ts, d.point_value, d.rule, d.tag))
+      .collect { case u if u.kind == "dd" => (u.dd.get, u.tag) }
+      .map { case (d, tag) => (d.metric, d.`type`, d.tags.mkString("|"), d.point_ts, d.point_value, d.rule, tag) }
       .sortBy(_.toString)
     assert(fast.length === slow.length)
     fast.zip(slow).foreach { case (f, s) => assert(f === s) }
@@ -88,9 +90,11 @@ class FastKayveeParitySpec extends SparkSpec {
       .collect()
       .map(r => (r.getString(0), r.getAs[Seq[String]](1).mkString("|"), r.getDouble(2), r.getLong(3), r.getString(4)))
       .sortBy(_.toString)
-    val fast = FastKayvee.cw(raw, "test-env")
+    // the cw rows of the unified delivery pass; their tag is the region
+    val fast = FastKayvee.unified(raw, "test-env")
       .collect()
-      .map(c => (c.metric_name, c.dim_names.zip(c.dim_values).map { case (n, v) => s"$n=$v" }.mkString("|"), c.value, c.ts_sec, c.region_tag))
+      .collect { case u if u.kind == "cw" => (u.cw.get, u.tag) }
+      .map { case (c, region) => (c.metric_name, c.dim_names.zip(c.dim_values).map { case (n, v) => s"$n=$v" }.mkString("|"), c.value, c.ts_sec, region) }
       .sortBy(_.toString)
     assert(fast.length === slow.length)
     fast.zip(slow).foreach { case (f, s) => assert(f === s) }
@@ -123,9 +127,10 @@ class FastKayveeParitySpec extends SparkSpec {
       .collect()
       .map(r => (r.getLong(0), r.getString(1), r.getString(2), r.getString(3), r.getLong(4), r.getLong(5)))
       .sortBy(_.toString)
-    val fast = graft.fast.FastKayvee.volume(raw, "test-env")
-      .groupBy(col("window_start"), col("env"), col("application"), col("team"))
-      .agg(count(lit(1)).as("n"), sum(col("nbytes")).as("sz"))
+    // the vol rows of the single-pass meta lane, fused aggregation
+    val fast = graft.agg.Aggregations
+      .metaCounts(FastKayvee.meta(raw, "test-env").toDF().filter(col("kind") === "vol"))
+      .select(col("window_start"), col("env"), col("application"), col("grp"), col("cnt"), col("sz"))
       .collect()
       .map(r => (r.getLong(0), r.getString(1), r.getString(2), r.getString(3), r.getLong(4), r.getLong(5)))
       .sortBy(_.toString)
@@ -205,9 +210,10 @@ class FastKayveeParitySpec extends SparkSpec {
       .collect()
       .map(r => (r.getLong(0), r.getString(1), r.getString(2), r.getString(3), r.getLong(4)))
       .sortBy(_.toString)
-    val fast = FastKayvee.routeNames(raw, "test-env")
-      .groupBy(col("window_start"), col("env"), col("application"), col("route"))
-      .agg(count(lit(1)).as("n"))
+    // the route rows of the single-pass meta lane, fused aggregation
+    val fast = graft.agg.Aggregations
+      .metaCounts(FastKayvee.meta(raw, "test-env").toDF().filter(col("kind") === "route"))
+      .select(col("window_start"), col("env"), col("application"), col("grp"), col("cnt"))
       .collect()
       .map(r => (r.getLong(0), r.getString(1), r.getString(2), r.getString(3), r.getLong(4)))
       .sortBy(_.toString)

@@ -21,10 +21,16 @@ class PlanGuardSpec extends SparkSpec {
 
   test("q_meta_series plans exactly ONE parquet scan (single-parse meta lane)") {
     // the round-2 shape parsed the corpus twice; the fused lane must keep
-    // one scan feeding both the volume and route-count series
-    val plan = planOf("q_meta_series")
-    val scans = "Scan parquet".r.findAllIn(plan).length
-    assert(scans === 1, s"expected 1 parquet scan, found $scans:\n${plan.take(3000)}")
+    // one scan feeding both the volume and route-count series. The volume
+    // and route-count lanes share its shape: one parse, one hash agg.
+    for (name <- Seq("q_meta_series", "q_volume_agg", "q_route_counts")) {
+      val plan = planOf(name)
+      val scans = "Scan parquet".r.findAllIn(plan).length
+      assert(scans === 1, s"$name: expected 1 parquet scan, found $scans:\n${plan.take(3000)}")
+      val exchanges = "Exchange hashpartitioning".r.findAllIn(plan).length
+      assert(exchanges === 1,
+        s"$name: expected 1 hash-aggregate exchange, found $exchanges:\n${plan.take(3000)}")
+    }
   }
 
   test("q_scan reaches the parquet reader with pushed filters") {

@@ -52,10 +52,15 @@ class TestSink extends BatchSink {
     if (SinkState.partialFailures.get() > 0 && rows.size > 1) {
       SinkState.partialFailures.decrementAndGet()
       // all but the last row accepted — PartialSendBatchError semantics
-      rows.init.foreach(r => SinkState.deliveredMetrics.add(r.getAs[String]("metric")))
-      SinkState.delivered.add((tag, rows.size - 1))
+      accept(tag, rows.init)
       throw new graft.streaming.Delivery.PartialSendBatchError("partial", Seq(rows.last))
     }
+    accept(tag, rows)
+  }
+
+  /** Records accepted rows in every SinkState view, whether the submit
+    * accepted all of them or only part. */
+  private def accept(tag: String, rows: Seq[Row]): Unit = {
     rows.foreach(r => SinkState.deliveredMetrics.add(r.getAs[String]("metric")))
     rows.foreach(r => SinkState.ddRows.add((tag, r)))
     rows.filter(r => r.schema != null && r.schema.fieldNames.contains("tags_str")).foreach { r =>
