@@ -8,8 +8,15 @@ the oracle SQL in DuckDB against the same test tables, and compares
 (rows, schema-by-sorted-column-name, hashed values). Mirrors what the
 driver's CORRECTNESS_r{N}.json records so failures surface before a round
 ends.
+
+DuckDB runs bounded, so one oracle too large for the host fails as
+`FAIL <lane>: ...` and the run goes on: its memory limit is 75% of
+MemAvailable in /proc/meminfo, it spills to <verifyOutDir>/duckdb_tmp (at
+most half the free disk there, removed at exit), and every failure gets a
+fresh database: a failed query can leave its spill allocated, or the
+connection invalidated, for the lanes after it.
 """
-import json, math, sys, glob, os
+import json, math, sys, glob, os, shutil
 import duckdb
 
 def canon(v):
@@ -28,11 +35,40 @@ def table(rows, cols):
     out = sorted("|".join(canon(r[i]) for i in idx) for r in rows)
     return [cols[i] for i in idx], out
 
-def main(sf_dir, out_dir):
+def mem_available():
+    """MemAvailable in bytes, or None where /proc/meminfo is missing."""
+    try:
+        with open("/proc/meminfo") as f:
+            for line in f:
+                if line.startswith("MemAvailable:"):
+                    return int(line.split()[1]) * 1024
+    except OSError:
+        pass
+    return None
+
+def connect(sf_dir, spill_dir):
     con = duckdb.connect()
+    avail = mem_available()
+    if avail:
+        con.execute(f"SET memory_limit = '{max(avail * 3 // 4 >> 20, 256)}MB'")
+    con.execute(f"SET temp_directory = '{spill_dir}'")
+    spill = shutil.disk_usage(spill_dir).free // 2
+    con.execute(f"SET max_temp_directory_size = '{spill >> 20}MB'")
     for p in glob.glob(f"{sf_dir}/*.parquet"):
         name = os.path.basename(p)[:-8]
         con.execute(f"CREATE VIEW {name} AS SELECT * FROM read_parquet('{p}')")
+    return con
+
+def main(sf_dir, out_dir):
+    spill_dir = os.path.join(out_dir, "duckdb_tmp")
+    os.makedirs(spill_dir, exist_ok=True)
+    try:
+        return check(sf_dir, out_dir, spill_dir)
+    finally:
+        shutil.rmtree(spill_dir, ignore_errors=True)
+
+def check(sf_dir, out_dir, spill_dir):
+    con = connect(sf_dir, spill_dir)
     oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
     n_pass = n_fail = 0
     for name, sql in sorted(oracle.items()):
@@ -45,8 +81,13 @@ def main(sf_dir, out_dir):
             exp_cols = [d[0] for d in exp_rel.description]
             exp = exp_rel.fetchall()
         except Exception as e:
-            print(f"FAIL {name}: {e}")
+            print(f"FAIL {name}: {e}", flush=True)
             n_fail += 1
+            try:
+                con.close()
+            except Exception:
+                pass
+            con = connect(sf_dir, spill_dir)
             continue
         # The driver fetches oracle results via pandas/arrow, where HUGEINT
         # (e.g. an uncast sum()) and DECIMAL become float64 and stringify as
@@ -69,7 +110,7 @@ def main(sf_dir, out_dir):
             print(f"FAIL {name}: rows {len(gt)} vs {len(et)}; first diffs: {diff}")
             n_fail += 1
         else:
-            print(f"PASS {name} ({len(gt)} rows)")
+            print(f"PASS {name} ({len(gt)} rows)", flush=True)
             n_pass += 1
     print(f"== {n_pass} pass, {n_fail} fail")
     return 1 if n_fail else 0

@@ -1,10 +1,21 @@
 package graft
+
+import java.util.concurrent.ConcurrentLinkedQueue
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler._
 import org.apache.spark.sql.SparkSession
 
-/** Benchmark main: runs every declared query at SPARK_GRAFT_SF_DIR and
-  * prints ONE JSON line with per-query and total seconds. A small untimed
-  * warm-up (JIT, codegen caches, parquet footers, fast-lane classloading)
-  * runs first so the first timed query isn't charged for JVM startup.
+/** Benchmark main, two modes over the same rep discipline ([[runRep]]) at
+  * SPARK_GRAFT_SF_DIR, after the same untimed warm-up (JIT, codegen caches,
+  * parquet footers, fast-lane classloading) at its `sf0.001` sibling:
+  *   - `runMain graft.Bench` — suite mode: every declared query, JSON
+  *     lines with per-query and total seconds (below);
+  *   - `runMain graft.Bench <reps> <lane...>` — lane mode ([[lanes]]):
+  *     `reps` interleaved rounds over just those lanes, then per lane the
+  *     round times and min, the min rep's phases, and its job and stage
+  *     profile, plus a JVM health line per round.
   *
   * Steal-aware measurement (round-7): this host shows bursty hypervisor
   * CPU steal — a rep can measure 10-40× its true cost (BENCH_r06 published
@@ -93,16 +104,77 @@ object Bench {
     System.gc()
   }
 
-  /** One timed cold rep of `name`: (wall seconds or -1 on failure,
-    * steal fraction of machine capacity during the rep). USER_HZ is 100
-    * on every mainstream Linux; `hostCpus` must be the HOST core count
+  /** Local property naming the lane whose rep launched a job. Set on the
+    * driver thread for the rep's timed region; Spark's local properties
+    * are inheritable, so jobs submitted from threads the rep starts
+    * (`ParallelJobs`, broadcast and subquery pools) carry it too. */
+  val LaneProperty = "graft.bench.lane"
+
+  /** A finished job: submit/finish epoch ms, stage and task counts. */
+  final case class JobRec(id: Int, desc: String, submitted: Long,
+                          finished: Long, stages: Int, tasks: Int)
+
+  /** A completed stage: wall (-1 when a timestamp is missing), executor
+    * run, CPU and GC time, all in ms. */
+  final case class StageRec(id: Int, wallMs: Long, runMs: Long, cpuMs: Long,
+                            gcMs: Long, tasks: Int)
+
+  /** One rep: wall seconds (-1 on failure), steal fraction of machine
+    * capacity, the lane's phases, and the jobs and stages it launched. */
+  final case class Rep(seconds: Double, stealFrac: Double,
+                       phases: Map[String, Double], jobs: Seq[JobRec],
+                       stages: Seq[StageRec])
+
+  /** Collects the jobs and stages of one lane's rep. A stage is charged
+    * through the job that submitted it: `onJobStart` carries the job's
+    * local properties, so the lane is fixed when the job is submitted,
+    * not read from driver state when the (asynchronous, possibly lagging)
+    * listener bus delivers the stage's completion. */
+  private final class RepListener(lane: String) extends SparkListener {
+    private val stageIds = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    private val live = new java.util.concurrent.ConcurrentHashMap[Int, JobRec]()
+    val jobs = new ConcurrentLinkedQueue[JobRec]()
+    val stages = new ConcurrentLinkedQueue[StageRec]()
+
+    private def prop(e: SparkListenerJobStart, k: String): Option[String] =
+      Option(e.properties).flatMap(p => Option(p.getProperty(k)))
+
+    override def onJobStart(e: SparkListenerJobStart): Unit =
+      if (prop(e, LaneProperty).contains(lane)) {
+        e.stageIds.foreach(stageIds.add)
+        // the result stage (created last) is named after the action's call site
+        val desc = prop(e, "spark.job.description")
+          .getOrElse(e.stageInfos.maxBy(_.stageId).name)
+        live.put(e.jobId, JobRec(e.jobId, desc, e.time, 0L,
+          e.stageInfos.size, e.stageInfos.map(_.numTasks).sum))
+      }
+    override def onJobEnd(e: SparkListenerJobEnd): Unit =
+      Option(live.remove(e.jobId)).foreach(j => jobs.add(j.copy(finished = e.time)))
+    override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
+      val si = e.stageInfo
+      if (stageIds.contains(si.stageId)) {
+        val wall = (for (a <- si.submissionTime; b <- si.completionTime) yield b - a)
+          .getOrElse(-1L)
+        val tm = Option(si.taskMetrics)
+        stages.add(StageRec(si.stageId, wall,
+          tm.fold(0L)(_.executorRunTime), tm.fold(0L)(_.executorCpuTime / 1000000L),
+          tm.fold(0L)(_.jvmGCTime), si.numTasks))
+      }
+    }
+  }
+
+  /** One timed cold rep of `name`. USER_HZ is 100 on every mainstream
+    * Linux; `hostCpus` must be the HOST core count
     * (`Runtime.availableProcessors`) because /proc/stat aggregates steal
     * over all host CPUs — scaling by the Spark parallelism env var would
-    * mis-state the fraction whenever the two differ.
+    * mis-state the fraction whenever the two differ. The rep's listener
+    * is drained before it returns, so its jobs and stages are complete.
     */
   def runRep(spark: SparkSession, name: String, sfDir: String,
-             hostCpus: Int): (Double, Double, Map[String, Double]) = {
-    import scala.jdk.CollectionConverters._
+             hostCpus: Int): Rep = {
+    val sc = spark.sparkContext
+    val listener = new RepListener(name)
+    sc.addSparkListener(listener)
     // Per-rep phase capture (round-20, verdict item 2): phases must come
     // from the SAME rep that produces the published min, or the artifact
     // mixes reps (r19's q_ann_recall_beam phase sum read 121% of its
@@ -111,7 +183,7 @@ object Bench {
     // at rep end; a phase that executes twice within one rep (a loop)
     // sums, because both executions are inside this rep's wall time.
     phaseTimes.clear()
-    currentLane = name
+    sc.setLocalProperty(LaneProperty, name)
     val s0 = stealJiffies()
     val t0 = System.nanoTime()
     val ok =
@@ -121,6 +193,7 @@ object Bench {
           System.err.println(s"BENCH FAIL $name: ${e.getClass.getSimpleName}: ${e.getMessage}")
           false
       }
+      finally sc.setLocalProperty(LaneProperty, null)
     val dt = (System.nanoTime() - t0) / 1e9
     val steal = stealJiffies() - s0
     // Only this lane's phases count (all phase keys are lane-prefixed;
@@ -129,11 +202,17 @@ object Bench {
     val phs = phaseTimes.asScala.collect {
       case (k, ts) if k.startsWith(name + ".") => k -> ts.sum
     }.toMap
-    currentLane = null
+    try org.apache.spark.sql.GraftShims.drainListenerBus(sc, 60000L)
+    catch {
+      case _: java.util.concurrent.TimeoutException =>
+        System.err.println(s"BENCH WARN: listener bus not drained after $name; its job stats may be short")
+    }
+    sc.removeSparkListener(listener)
     cleanup(spark)
     val stealFrac =
       if (dt > 0) steal.toDouble / (dt * 100.0 * hostCpus) else 0.0
-    (if (ok) dt else -1.0, stealFrac, phs)
+    Rep(if (ok) dt else -1.0, stealFrac, phs,
+      listener.jobs.asScala.toSeq.sortBy(_.id), listener.stages.asScala.toSeq.sortBy(_.id))
   }
 
   /** Sub-phase wall times recorded by instrumented query bodies
@@ -141,39 +220,10 @@ object Bench {
     * execution. Bench emits the per-phase min alongside the per-query
     * mins ("phases" in the JSON), so a regression in a composite query's
     * headline number is attributable to its phase without re-profiling.
-    * Other tools execute the same bodies and append harmlessly — only
-    * Bench reads this. */
+    * Verify and the specs execute the same bodies and append harmlessly —
+    * only Bench reads this. */
   val phaseTimes =
     new java.util.concurrent.ConcurrentHashMap[String, List[Double]]()
-
-  /** Lane whose rep is currently inside runRep's timed region — the
-    * scheduler listener attributes completed stages to it so the artifact
-    * can carry per-lane task/parallelism stats (round-20 verdict item 7:
-    * job-overhead-bound lanes should be machine-visible from one run, not
-    * inferred from cross-config runs). Null outside reps (warm-up,
-    * calibration, cleanup) so stray stages never charge a lane.
-    * @volatile: written by the driver thread, read by the listener bus. */
-  @volatile private var currentLane: String = null
-
-  /** Per-lane scheduler stats accumulated across ALL reps (stats describe
-    * the lane's job structure, which is identical across reps):
-    * (stages, tasks, max tasks in any one stage). */
-  val laneStats =
-    new java.util.concurrent.ConcurrentHashMap[String, (Long, Long, Long)]()
-
-  private def installLaneStatsListener(spark: SparkSession): Unit =
-    spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onStageCompleted(
-            e: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-          val lane = currentLane
-          if (lane != null) {
-            val nt = e.stageInfo.numTasks.toLong
-            laneStats.merge(lane, (1L, nt, nt), (a, b) =>
-              (a._1 + b._1, a._2 + b._2, math.max(a._3, b._3)))
-          }
-        }
-      })
 
   /** Time `body` into [[phaseTimes]] under `name`. Records ONLY on
     * successful completion: a body that throws mid-phase would otherwise
@@ -217,19 +267,152 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val reps = args.headOption.flatMap(_.toIntOption)
+    require(args.isEmpty || (reps.exists(_ >= 1) && args.length > 1),
+      "usage: graft.Bench [<reps> <lane...>]")
+    val unknown = args.drop(1).filterNot(SparkEntry.queries.contains)
+    require(unknown.isEmpty, s"not declared queries: ${unknown.mkString(", ")}")
+    warmDir(sfDir) // fail before calibrating, not after
+    val spark = GraftSession.local("graft-bench")
+    if (args.isEmpty) suite(spark, sfDir)
+    else lanes(spark, sfDir, reps.get, args.toSeq.drop(1), println)
+    spark.stop()
+  }
+
+  /** Bench's untimed warm-up lanes. q_ann_recall_pq_trained is included
+    * because its first execution pays ~10 s of codegen/JIT that would
+    * otherwise pollute rep1 of the heaviest query in the suite (min-of-reps
+    * absorbs it, but the rep arrays should reflect the query, not the
+    * compiler). */
+  private val WARM_LANES =
+    Seq("q_dim_project", "q_tag_batch", "q1_agg", "q_similarity_topk",
+      "q_ann_recall_pq_trained")
+
+  /** The warm-up fixture: the `sf0.001` sibling of `sfDir` (the smallest
+    * SF exercises the same code paths). Fails when it is missing rather
+    * than run cold. */
+  private def warmDir(sfDir: String): String = {
+    val d = new java.io.File(
+      new java.io.File(sfDir).getAbsoluteFile.getParentFile, "sf0.001")
+    require(d.isDirectory, s"Bench warm-up dir not found: $d (the sf0.001 sibling of $sfDir)")
+    d.getPath
+  }
+
+  /** Runs `names` once each at [[warmDir]], untimed; failures are ignored
+    * (the timed rep reports them). */
+  private def warmUp(spark: SparkSession, sfDir: String, names: Seq[String]): Unit = {
+    val dir = warmDir(sfDir)
+    names.foreach { n =>
+      try SparkEntry.queries(n)(spark, dir).count()
+      catch { case _: Throwable => }
+      cleanup(spark)
+    }
+  }
+
+  /** Index of a rep list's min among successful reps (-1 if none). Ties
+    * break toward the LATER rep (r19 advice): on an exact time tie
+    * between a shared rep and a later controlled (isolated/extra) rep,
+    * provenance should name the controlled one, and phases should come
+    * from it. */
+  private[graft] def minRepIdx(ts: Seq[Double]): Int = {
+    val clean = ts.zipWithIndex.filter(_._1 >= 0)
+    if (clean.isEmpty) -1
+    else {
+      val m = clean.map(_._1).min
+      clean.filter(_._1 == m).map(_._2).max
+    }
+  }
+
+  /** A phase whose name prefixes another phase of the same lane (e.g.
+    * q_hybrid_delete.bm25_lifecycle containing .bm25_lifecycle.build) is
+    * an umbrella: it times a span that CONTAINS its children. */
+  private def isUmbrella(phs: Map[String, Double], k: String): Boolean =
+    phs.keys.exists(o => o != k && o.startsWith(k + "."))
+
+  /** Sum of a rep's leaf (non-umbrella) phases — disjoint spans inside
+    * the rep's wall time, so never above it. */
+  private def leafSum(phs: Map[String, Double]): Double =
+    phs.collect { case (k, v) if !isUmbrella(phs, k) => v }.sum
+
+  /** One-line JVM health: GC counts/times, code heap, metaspace and old
+    * gen occupancy, and total JIT time. */
+  private def jvmHealth(): String = {
+    import java.lang.management.ManagementFactory
+    val gc = ManagementFactory.getGarbageCollectorMXBeans.asScala
+      .map(b => s"${b.getName.replace(' ', '_')}=${b.getCollectionCount}/${b.getCollectionTime}ms").mkString(",")
+    val pools = ManagementFactory.getMemoryPoolMXBeans.asScala
+      .filter(p => p.getName.contains("CodeHeap") || p.getName.contains("Metaspace") || p.getName.contains("Old"))
+      .map(p => s"${p.getName.replace(' ', '_')}=${p.getUsage.getUsed / 1048576}MB").mkString(",")
+    val ct = ManagementFactory.getCompilationMXBean.getTotalCompilationTime
+    s"gc[$gc] pools[$pools] jit=${ct}ms"
+  }
+
+  /** Lane mode: the warm-up (Bench's lanes plus `names`), then `reps`
+    * interleaved rounds of [[runRep]] over `names` with a HEALTH line
+    * after each round; then, per lane, its round times and min (`TIME`),
+    * the min rep's phases (`PHASE`, `ATTRIB`), and its job profile
+    * (`PROFILE`: jobs, stages, tasks, the union of job spans and the
+    * driver gap outside it; `JOB` lines of ≥20 ms, `STAGE` lines of
+    * ≥100 ms). Returns each lane's reps in round order. */
+  def lanes(spark: SparkSession, sfDir: String, reps: Int, names: Seq[String],
+            out: String => Unit): Map[String, Seq[Rep]] = {
+    val hostCpus = Runtime.getRuntime.availableProcessors
+    warmUp(spark, sfDir, (WARM_LANES ++ names).distinct)
+    val byLane = names.map(_ -> Vector.newBuilder[Rep]).toMap
+    (1 to reps).foreach { r =>
+      names.foreach { n =>
+        val rep = runRep(spark, n, sfDir, hostCpus)
+        byLane(n) += rep
+        System.err.println(f"ROUND $r $n ${rep.seconds}%.2f")
+      }
+      out(s"HEALTH round=$r ${jvmHealth()}")
+    }
+    val result = byLane.map { case (n, b) => n -> b.result() }
+    names.foreach { n =>
+      val rs = result(n)
+      val idx = minRepIdx(rs.map(_.seconds))
+      out(s"TIME $n " + rs.map(r => d2(r.seconds)).mkString(" ") +
+        " min=" + (if (idx < 0) "failed" else d2(rs(idx).seconds)))
+      if (idx >= 0) {
+        val m = rs(idx)
+        m.phases.toSeq.sortBy(_._1).foreach { case (ph, t) =>
+          out(s"PHASE $ph ${d2(t)}" + (if (isUmbrella(m.phases, ph)) " (umbrella)" else "") + " (min rep)")
+        }
+        if (m.phases.nonEmpty)
+          out(s"ATTRIB $n ${d1(100 * leafSum(m.phases) / m.seconds)}% " +
+            s"(leaf sum ${d2(leafSum(m.phases))} of ${d2(m.seconds)})")
+        // union of job spans, so overlapping ParallelJobs count once
+        val spans = m.jobs.map(j => (j.submitted, j.finished)).sorted
+        val jobMs = spans.foldLeft((0L, Long.MinValue)) { case ((sum, end), (a, b)) =>
+          if (b <= end) (sum, end) else (sum + b - math.max(a, end), b)
+        }._1
+        out(s"PROFILE $n wall=${d2(m.seconds)} jobs=${m.jobs.size} " +
+          s"jobwall=${d2(jobMs / 1e3)} driverGap=${d2(m.seconds - jobMs / 1e3)} " +
+          s"stages=${m.stages.size} tasks=${m.stages.map(_.tasks).sum}")
+        m.jobs.filter(j => j.finished - j.submitted >= 20).foreach { j =>
+          out(s"  JOB ${j.id} ${d2((j.finished - j.submitted) / 1e3)}s " +
+            s"stages=${j.stages} tasks=${j.tasks}  ${j.desc.take(110)}")
+        }
+        m.stages.filter(_.wallMs >= 100).foreach { st =>
+          out(s"  STAGE ${st.id} wall=${d2(st.wallMs / 1e3)}s run=${d2(st.runMs / 1e3)}s " +
+            s"cpu=${d2(st.cpuMs / 1e3)}s gc=${d2(st.gcMs / 1e3)}s tasks=${st.tasks}")
+        }
+      }
+    }
+    result
+  }
+
+  private def d1(x: Double): String =
+    String.format(java.util.Locale.ROOT, "%.1f", Double.box(x))
+  private def d2(x: Double): String =
+    String.format(java.util.Locale.ROOT, "%.2f", Double.box(x))
+
+  /** Suite mode: every declared query, JSON lines on stdout (the last one
+    * compact) and the full line in bench_latest.json. */
+  private def suite(spark: SparkSession, sfDir: String): Unit = {
     // Steal fractions scale by the HOST core count (/proc/stat aggregates
     // over all host CPUs), independent of the Spark parallelism setting.
     val hostCpus = Runtime.getRuntime.availableProcessors
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.hadoop.fs.file.impl", classOf[graft.fs.NioLocalFileSystem].getName)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    installLaneStatsListener(spark)
 
     // one untimed probe first: the very first run of the loop pays JIT
     // compilation, so an unwarmed calib_pre can read 10-30% slower than
@@ -291,18 +474,7 @@ object Bench {
     val calibParPreHealthy =
       calibPreHealthy && calibParPre <= PAR_HEALTHY_RATIO * calibPre
 
-    // warm-up (not timed): smallest sf exercises the same code paths.
-    // q_ann_recall_pq_trained is included because its first execution
-    // pays ~10 s of codegen/JIT that would otherwise pollute rep1 of the
-    // heaviest query in the suite (min-of-reps absorbs it, but the rep
-    // arrays should reflect the query, not the compiler).
-    val warmDir = "/root/testdata/sf0.001"
-    Seq("q_dim_project", "q_tag_batch", "q1_agg", "q_similarity_topk",
-      "q_ann_recall_pq_trained").foreach { n =>
-      try SparkEntry.queries(n)(spark, warmDir).count()
-      catch { case _: Throwable => }
-      cleanup(spark)
-    }
+    warmUp(spark, sfDir, WARM_LANES)
 
     val names = SparkEntry.queries.keys.toSeq
     val times = scala.collection.mutable.Map.empty[String, List[Double]]
@@ -311,13 +483,17 @@ object Bench {
     val repPhases =
       scala.collection.mutable.Map.empty[String, List[Map[String, Double]]]
     val repKinds = scala.collection.mutable.Map.empty[String, List[String]]
-    def record(name: String, rep: (Double, Double, Map[String, Double]),
-               calib: Double, kind: String): Unit = {
-      times(name) = times.getOrElse(name, Nil) :+ rep._1
-      steals(name) = steals.getOrElse(name, Nil) :+ rep._2
+    // (stages, tasks, max tasks in any one stage) over ALL of a lane's reps
+    val laneStats = scala.collection.mutable.Map.empty[String, (Long, Long, Long)]
+    def record(name: String, rep: Rep, calib: Double, kind: String): Unit = {
+      times(name) = times.getOrElse(name, Nil) :+ rep.seconds
+      steals(name) = steals.getOrElse(name, Nil) :+ rep.stealFrac
       calibs(name) = calibs.getOrElse(name, Nil) :+ calib
-      repPhases(name) = repPhases.getOrElse(name, Nil) :+ rep._3
+      repPhases(name) = repPhases.getOrElse(name, Nil) :+ rep.phases
       repKinds(name) = repKinds.getOrElse(name, Nil) :+ kind
+      val (st, tk, mx) = laneStats.getOrElse(name, (0L, 0L, 0L))
+      val nts = rep.stages.map(_.tasks.toLong)
+      laneStats(name) = (st + nts.size, tk + nts.sum, (mx +: nts).max)
     }
     // Per-SEGMENT calibration (round-10 hardening): a single pre/post
     // scalar probe cannot correct contention that arrives MID-run — the
@@ -450,26 +626,13 @@ object Bench {
     // steal/disagree/heavy retry carry reps_base+1 entries in rep_times
     // (the old fixed "reps":2 field misdescribed retried queries).
     val repCalib = obj(names.map(n => n -> arr(calibs(n))))
-    // Index of the rep that produced the published min. Ties break toward
-    // the LATER rep (r19 advice): on an exact time tie between a shared
-    // rep and a later controlled (isolated/extra) rep, provenance should
-    // name the controlled one, and phases should come from it.
-    def minRepIdx(n: String): Int = {
-      val clean = times(n).zipWithIndex.filter(_._1 >= 0)
-      if (clean.isEmpty) -1
-      else {
-        val m = clean.map(_._1).min
-        clean.filter(_._1 == m).map(_._2).max
-      }
-    }
+    // Index of the rep that produced the published min.
+    def minRepIdx(n: String): Int = Bench.minRepIdx(times(n))
     // Phases of the min rep ONLY (round-20, verdict item 2): every phase
     // value in the artifact comes from the same execution that produced
     // the lane's published headline, so Σ(leaf phases) ≤ headline holds
-    // by construction and is machine-checked below. Umbrella phases — a
-    // phase whose name prefixes another phase of the same lane (e.g.
-    // q_hybrid_delete.bm25_lifecycle containing .bm25_lifecycle.build) —
-    // time a span that CONTAINS its children and are listed separately so
-    // a naive sum doesn't double-count them.
+    // by construction and is machine-checked below. Umbrella phases are
+    // listed separately so a naive sum doesn't double-count them.
     val minPhasesByLane: Map[String, Map[String, Double]] = names.map { n =>
       val idx = minRepIdx(n)
       val phs = repPhases.getOrElse(n, Nil)
@@ -478,7 +641,7 @@ object Bench {
     val allPhases = minPhasesByLane.values.flatten.toSeq.sortBy(_._1)
     val phases = obj(allPhases.map { case (k, v) => k -> d4(v) })
     val umbrellas = minPhasesByLane.flatMap { case (_, phs) =>
-      phs.keys.filter(k => phs.keys.exists(o => o != k && o.startsWith(k + ".")))
+      phs.keys.filter(isUmbrella(phs, _))
     }.toSeq.sorted
     val umbrellaArr = umbrellas.map("\"" + _ + "\"").mkString("[", ",", "]")
     // Publish-time machine check: for every lane, the sum of its min-rep
@@ -486,11 +649,7 @@ object Bench {
     // disjoint spans inside the rep's wall time; an excess means a phase
     // leaked across reps or a background thread recorded into the lane).
     val phaseSumViolations = names.filter { n =>
-      val phs = minPhasesByLane(n)
-      val leafSum = phs.collect {
-        case (k, v) if !phs.keys.exists(o => o != k && o.startsWith(k + ".")) => v
-      }.sum
-      results(n) >= 0 && leafSum > results(n) + 1e-6
+      results(n) >= 0 && leafSum(minPhasesByLane(n)) > results(n) + 1e-6
     }
     if (phaseSumViolations.nonEmpty)
       System.err.println(
@@ -515,13 +674,13 @@ object Bench {
       n -> ("\"" + kind + "\"")
     })
     // Per-lane scheduler stats (round-20 verdict item 7): stage/task
-    // counts accumulated by the listener across ALL of the lane's reps
+    // counts summed over the stage records of ALL of the lane's reps
     // (divide by "reps" for per-rep structure; max_stage_tasks is
     // rep-invariant). A lane with many stages but max_stage_tasks far
     // below the core count is job-overhead-bound, machine-visibly, from
     // one artifact — no cross-config run needed.
     val laneStatsJson = obj(names.map { n =>
-      val (st, tk, mx) = Option(laneStats.get(n)).getOrElse((0L, 0L, 0L))
+      val (st, tk, mx) = laneStats.getOrElse(n, (0L, 0L, 0L))
       n -> s"""{"reps":${times(n).size},"stages":$st,"tasks":$tk,"max_stage_tasks":$mx}"""
     })
     val full = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"phases":$phases,"phase_umbrellas":$umbrellaArr,"phase_provenance":"min-rep","phase_sum_ok":$phaseSumOk,"phase_sum_violations":$phaseViolArr,"failed":$failed,"reps_base":$REPS_BASE,"agg":"min","norm":"segment-drift+global-anchor","segment_size":$SEGMENT,"rep_times":$repTimes,"rep_steal":$repSteal,"rep_calib":$repCalib,"lane_stats":$laneStatsJson,"steal_frac_threshold":$STEAL_FRAC,"disagree_ratio":$DISAGREE,"retried":${suspects.size},"isolated":$isolatedArr,"min_rep_kind":$minRepKind,"host_cpus":$hostCpus,"calib_pre":${d4(calibPre)},"calib_pre_healthy":$calibPreHealthy,"calib_wait_retries":$calibWaits,"calib_post":${d4(calibPost)},"calib_par_pre":${d4(calibParPre)},"calib_par_pre_healthy":$calibParPreHealthy,"par_wait_retries":$parWaits,"calib_par_post":${d4(calibParPost)},"ref_calib":$REF_CALIB,"total_calib_normalized":${d4(totalNorm)},"sf":"$sfDir"}"""
@@ -547,6 +706,5 @@ object Bench {
     // bench_latest.json.
     val qsCompact = obj(names.map(n => n -> d4(results(n))))
     println(s"""{"metric":"total","value":${d4(total)},"unit":"sec","queries":$qsCompact,"failed":${results.values.count(_ < 0)},"retried":${suspects.size},"calib_pre":${d4(calibPre)},"calib_pre_healthy":$calibPreHealthy,"calib_par_pre_healthy":$calibParPreHealthy,"total_calib_normalized":${d4(totalNorm)},"sf":"$sfDir"}""")
-    spark.stop()
   }
 }

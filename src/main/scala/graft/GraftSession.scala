@@ -11,7 +11,9 @@ import org.apache.spark.sql.SparkSession
   * local assumptions.
   */
 object GraftSession {
-  def cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+  /** Local parallelism: `SPARK_GRAFT_CPUS`, else the host core count. */
+  def cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+    Runtime.getRuntime.availableProcessors.toString)
 
   def local(appName: String = "graft"): SparkSession = {
     val spark = SparkSession

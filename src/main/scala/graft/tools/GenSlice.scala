@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Scaling-fixture generator: writes an N×-replicated slice of an
@@ -24,12 +23,7 @@ object GenSlice {
   def main(args: Array[String]): Unit = {
     val Array(src, out, factorS) = args.take(3)
     val factor = factorS.toInt
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local("graft-genslice")
     val emb = spark.read.parquet(s"$src/embeddings.parquet")
     val nV = emb.count()
     // read the embedding dimension from the data instead of assuming 64

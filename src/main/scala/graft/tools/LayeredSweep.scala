@@ -5,8 +5,8 @@ import org.apache.spark.sql.functions._
 /** Measurement harness for the layered-beam (W, R) recall sweep:
   * `runMain graft.tools.LayeredSweep <sfDir> [w1 r1 w0 r0]...` prints
   * hits/cand per configuration — the source of the layered rows in
-  * docs/SCALING.md's beam table (same role GenSlice/TimeQuery play for
-  * the scaling exponents). */
+  * docs/SCALING.md's beam table (same role GenSlice and Bench's lane mode
+  * play for the scaling exponents). */
 object LayeredSweep {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
@@ -18,14 +18,7 @@ object LayeredSweep {
         "usage: LayeredSweep <sfDir> [w1 r1 w0 r0]...  (each config is 4 integers)")
       sys.exit(2)
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local("graft-layered-sweep")
     configs.grouped(4).foreach { g =>
       val Array(w1, r1, w0, r0) = g.map(_.toInt)
       val (_, _, out) = graft.queries.SimilarityQueries.beamLayeredServe(

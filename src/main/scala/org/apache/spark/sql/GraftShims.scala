@@ -10,4 +10,9 @@ import org.apache.spark.sql.catalyst.expressions.Expression
 object GraftShims {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
   def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
+
+  /** Block until every listener has seen every event posted so far
+    * (`private[spark]`); throws `TimeoutException` after `timeoutMs`. */
+  def drainListenerBus(sc: org.apache.spark.SparkContext, timeoutMs: Long): Unit =
+    sc.listenerBus.waitUntilEmpty(timeoutMs)
 }

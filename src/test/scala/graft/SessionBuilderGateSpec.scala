@@ -1,0 +1,45 @@
+package graft
+
+import scala.jdk.CollectionConverters._
+
+import org.scalatest.funsuite.AnyFunSuite
+
+/** Source-level gate, after the PairEmissionGateSpec precedent: every
+  * entry point builds its session through `GraftSession.local`, so the
+  * master, shuffle partitions, time zone and local file system are chosen
+  * in one place and every main runs at the same default core count.
+  *
+  * Rule: with whole-line comments stripped, `SparkSession.builder` (any
+  * whitespace or line break before `.builder`) appears under `src/main`
+  * only in GraftSession.scala.
+  */
+class SessionBuilderGateSpec extends AnyFunSuite {
+
+  private val builder = """SparkSession\s*\.\s*builder""".r
+
+  private[graft] def buildsSession(source: String): Boolean = {
+    val code = source.linesIterator.filterNot { l =>
+      val t = l.trim
+      t.startsWith("//") || t.startsWith("*") || t.startsWith("/*")
+    }.mkString("\n")
+    builder.findFirstIn(code).nonEmpty
+  }
+
+  test("SparkSession.builder appears under src/main only in GraftSession.scala") {
+    val root = java.nio.file.Paths.get("src/main")
+    assert(java.nio.file.Files.isDirectory(root), s"missing $root")
+    val builders = java.nio.file.Files.walk(root).iterator.asScala
+      .filter(_.toString.endsWith(".scala"))
+      .filter(p => buildsSession(new String(java.nio.file.Files.readAllBytes(p), "UTF-8")))
+      .map(_.getFileName.toString).toSeq.sorted
+    assert(builders == Seq("GraftSession.scala"),
+      s"build the session with GraftSession.local instead: ${builders.mkString(", ")}")
+  }
+
+  test("the gate sees a builder split across lines and skips comment lines") {
+    assert(buildsSession("val s = SparkSession\n  .builder()\n  .getOrCreate()"))
+    assert(buildsSession("val s = org.apache.spark.sql.SparkSession.builder().getOrCreate()"))
+    assert(!buildsSession("/** usage:\n  * SparkSession.builder()\n  */\nval x = 1"))
+    assert(!buildsSession("// SparkSession.builder() is not called here"))
+  }
+}
