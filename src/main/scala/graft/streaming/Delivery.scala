@@ -4,7 +4,7 @@ import scala.collection.mutable
 
 import org.apache.spark.sql.{DataFrame, Dataset, Row}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
+import org.apache.spark.util.LongAccumulator
 
 import graft.project.MetricProject
 
@@ -75,38 +75,6 @@ object Delivery {
   trait CwSink extends Serializable {
     def putMetricData(region: String, rows: Seq[Row]): Unit
   }
-
-  private val ddStructType: StructType = StructType(Seq(
-    StructField("record_id", LongType),
-    StructField("metric", StringType),
-    StructField("type", StringType),
-    StructField("tags", ArrayType(StringType)),
-    StructField("point_ts", LongType),
-    StructField("point_value", DoubleType),
-    StructField("rule", StringType)
-  ))
-
-  private val cwStructType: StructType = StructType(Seq(
-    StructField("record_id", LongType),
-    StructField("metric_name", StringType),
-    StructField("dim_names", ArrayType(StringType)),
-    StructField("dim_values", ArrayType(StringType)),
-    StructField("value", DoubleType),
-    StructField("ts_sec", LongType),
-    StructField("storage_resolution", IntegerType)
-  ))
-
-  /** Schema of sink-stage dead letters: the failed records' FULL encoded
-    * output — their typed dd rows AND their cw datums — in the unified
-    * frame shape, so replay re-drives both lanes (the reference spills the
-    * whole `EncodeOutput`, DDMetrics + CWMetrics, to FailedLogsFile:
-    * `main.go:55`, `alerts_consumer.go:226-231`). */
-  val failedSchema: StructType = StructType(Seq(
-    StructField("kind", StringType), // "dd" | "cw"
-    StructField("tag", StringType),
-    StructField("dd", ddStructType),
-    StructField("cw", cwStructType)
-  ))
 
   /** Declarative-lane unified frame from a statused (parse→route→status)
     * frame: dd + cw + dead branches. Callers persist the input first — the
@@ -201,15 +169,23 @@ object Delivery {
     * full, and every tag at partition end. Executor memory is
     * O(distinct tags × batchCount) rows per task — the same per-shard
     * bound as the reference's ≤100 buffered records per tag
-    * (`main.go:56`), never O(partition).
+    * (`main.go:56`), never O(partition) — plus the partition's dead
+    * letters.
     *
     * Per flush: submits the dd rows with retry, then — only after a fully
     * successful dd flush, mirroring the early return at
     * `alerts_consumer.go:266-269` — the same records' CW datums when the
-    * tag is a configured region (logged-not-retried). Rows of records
-    * whose dd rows exhausted retries are returned in [[failedSchema]]
-    * shape: their dd rows AND their cw datums, the replayable
-    * FailedLogsFile content.
+    * tag is a configured region (logged-not-retried).
+    *
+    * Returns the partition's dead letters in the [[Unified]] row shape
+    * (kind, tag, dd, cw, raw, err), counted into `deadRows` and
+    * `failedRows`: its `kind = "dead"` rows as they came in (parse and
+    * projection failures, never delivered), then the rows of records whose
+    * dd rows exhausted retries — their dd rows AND their cw datums, so
+    * replay re-drives both lanes (the reference spills the whole
+    * `EncodeOutput`, DDMetrics + CWMetrics, to FailedLogsFile: `main.go:55`,
+    * `alerts_consumer.go:226-231`). Delivery runs while the input is
+    * consumed, before the first output row.
     */
   def deliverPartition(
       rows: Iterator[Row],
@@ -218,13 +194,16 @@ object Delivery {
       attempts: Int,
       baseMs: Long,
       batchCount: Int,
-      cwRegions: Set[String]
+      cwRegions: Set[String],
+      deadRows: LongAccumulator,
+      failedRows: LongAccumulator
   ): Iterator[Row] = {
     final class TagBuf(val tag: String) {
       val dd = mutable.ArrayBuffer.empty[Row]
       val cw = mutable.ArrayBuffer.empty[Row]
       var records = 0
     }
+    val deadOut = mutable.ArrayBuffer.empty[Row]
     val failedOut = mutable.ArrayBuffer.empty[Row]
     val bufs = mutable.LinkedHashMap.empty[String, TagBuf]
 
@@ -235,10 +214,10 @@ object Delivery {
         else submitWithRetry(sink, b.tag, b.dd.toSeq, attempts, baseMs)
       if (notDelivered.nonEmpty) {
         val failedRids = notDelivered.map(_.getLong(0)).toSet
-        failedOut ++= notDelivered.map(d => Row("dd", b.tag, d, null))
+        failedOut ++= notDelivered.map(d => Row("dd", b.tag, d, null, null, null))
         // failed records' cw datums spill too — replay re-drives both lanes
         failedOut ++= b.cw.filter(c => failedRids.contains(c.getLong(0)))
-          .map(c => Row("cw", b.tag, null, c))
+          .map(c => Row("cw", b.tag, null, c, null, null))
       }
       if (notDelivered.isEmpty && b.cw.nonEmpty && cwRegions.contains(b.tag))
         cwSink.foreach { cs =>
@@ -262,7 +241,8 @@ object Delivery {
         ddIdx = r.fieldIndex("dd"); cwIdx = r.fieldIndex("cw")
       }
       val kind = r.getString(kindIdx)
-      if (kind != "dead") { // "dead" rows are written upstream, never delivered
+      if (kind == "dead") deadOut += r
+      else {
         val s = if (kind == "dd") r.getStruct(ddIdx) else r.getStruct(cwIdx)
         val rid = s.getLong(0)
         val tag = r.getString(tagIdx)
@@ -277,6 +257,8 @@ object Delivery {
       }
     }
     bufs.valuesIterator.foreach(flush)
-    failedOut.iterator
+    deadRows.add(deadOut.size)
+    failedRows.add(failedOut.size)
+    deadOut.iterator ++ failedOut.iterator
   }
 }

@@ -19,8 +19,8 @@ import graft.project.MetricProject
   * `mapPartitions`, so the plan is incrementalizable untouched) →
   * `foreachBatch` sink that delivers each source partition in place — per
   * tag ≤100-record batches, as kbc's batcher forms them per shard consumer
-  * — retries, and appends failures to a parquet dead-letter path
-  * (`FailedLogsFile` analog).
+  * — retries, and appends the batch's failures, if it has any, to a parquet
+  * dead-letter path (`FailedLogsFile` analog).
   *
   * Scale: delivery is stateless and has no exchange, so the pipeline
   * scales with source partitions (Kinesis shards ≙ partitions) and a
@@ -70,8 +70,9 @@ object StreamPipeline {
     *
     * No driver-side collect and no exchange: delivery is a `mapPartitions`
     * over the source partitions (see [[Delivery.deliverPartition]] for why
-    * that is the faithful analog of kbc's per-shard batching). Caller
-    * starts the returned writer. */
+    * that is the faithful analog of kbc's per-shard batching), and a
+    * micro-batch runs one job of one stage when nothing needs spilling —
+    * see [[deliverBatch]]. Caller starts the returned writer. */
   def deliver(
       raw: DataFrame,
       cfg: Config,
@@ -80,39 +81,50 @@ object StreamPipeline {
   ): DataStreamWriter[Row] = {
     val writer = graft.fast.FastKayvee.unified(raw, cfg.deployEnv).toDF().writeStream
       .trigger(Trigger.ProcessingTime(cfg.triggerInterval))
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        batch.persist()
-        try deliverBatch(batch, cfg, sink, cwSink)
-        finally { batch.unpersist(); () }
-      }
+      .foreachBatch { (batch: DataFrame, _: Long) => deliverBatch(batch, cfg, sink, cwSink) }
     cfg.checkpointLocation.fold(writer)(c => writer.option("checkpointLocation", c))
   }
 
-  /** One micro-batch of the unified frame: spill parse-stage dead letters,
-    * then deliver every partition where it is and spill whatever exhausted
-    * retries. */
+  /** One micro-batch of the unified frame. Delivery is its first action: a
+    * single `foreach` over [[Delivery.deliverPartition]]'s output — each
+    * source partition (one per shard) batches its own rows per tag, as
+    * kbc does per shard consumer, and yields only its dead letters. With a
+    * `deadLetterPath` that small output is persisted first, so the spill
+    * writes read it from the cache instead of re-running delivery, and each
+    * directory is written only when its accumulator counted rows there:
+    * `parse` (raw, err) for parse/projection failures, `sink` (kind, tag,
+    * dd, cw) for records that exhausted retries. A clean batch is one job
+    * of one stage; a batch with dead letters adds one write job per
+    * non-empty directory.
+    *
+    * A lost cached block is recomputed, which re-runs delivery for its
+    * partition: at-least-once, the same as a retried batch. */
   private def deliverBatch(
       unified: DataFrame,
       cfg: Config,
       sink: BatchSink,
       cwSink: Option[Delivery.CwSink]
   ): Unit = {
-    cfg.deadLetterPath.foreach { p =>
-      val dead = unified.filter(col("kind") === "dead").select(col("raw"), col("err"))
-      if (!dead.isEmpty) dead.write.mode("append").parquet(p + "/parse")
-    }
-    // delivered in place: each source partition (one per shard) batches
-    // its own rows per tag, as kbc does per shard consumer
-    val failed = unified.mapPartitions { it =>
-      Delivery.deliverPartition(
-        it, sink, cwSink, cfg.retryAttempts, cfg.retryBaseMs, cfg.batchCount, cfg.cwRegions)
-    }(org.apache.spark.sql.Encoders.row(Delivery.failedSchema))
-    // exactly ONE action over `failed` runs the delivery side effects once
-    // per partition (never .isEmpty here — a limit-1 probe would deliver a
-    // partial prefix)
+    val sc = unified.sparkSession.sparkContext
+    val deadRows = sc.longAccumulator
+    val failedRows = sc.longAccumulator
+    val out = unified.mapPartitions { it =>
+      Delivery.deliverPartition(it, sink, cwSink, cfg.retryAttempts, cfg.retryBaseMs,
+        cfg.batchCount, cfg.cwRegions, deadRows, failedRows)
+    }(org.apache.spark.sql.Encoders.row(unified.schema))
     cfg.deadLetterPath match {
-      case Some(p) => failed.write.mode("append").parquet(p + "/sink")
-      case None    => failed.foreach(_ => ())
+      case None => out.foreach(_ => ())
+      case Some(p) =>
+        out.persist()
+        try {
+          out.foreach(_ => ())
+          if (deadRows.value > 0)
+            out.filter(col("kind") === "dead").select(col("raw"), col("err"))
+              .write.mode("append").parquet(p + "/parse")
+          if (failedRows.value > 0)
+            out.filter(col("kind") =!= "dead").select(col("kind"), col("tag"), col("dd"), col("cw"))
+              .write.mode("append").parquet(p + "/sink")
+        } finally { out.unpersist(); () }
     }
   }
 

@@ -34,17 +34,20 @@ object SinkState {
   val cwRows = new ConcurrentLinkedQueue[(String, Row)]()
   // every accepted submit in arrival order: (lane "dd" | "cw", tag, first field of each row)
   val log = new ConcurrentLinkedQueue[(String, String, Seq[Any])]()
+  // every DD submit attempt, failed ones included: (tag, first field of each row)
+  val submits = new ConcurrentLinkedQueue[(String, Seq[Any])]()
   def reset(failures: Int = 0, partial: Int = 0, cwFailures: Int = 0): Unit = {
     delivered.clear(); deliveredMetrics.clear(); seriesPoints.clear(); threads.clear()
     attempts.set(0); failuresToInject.set(failures); partialFailures.set(partial)
     cwDelivered.clear(); cwAttempts.set(0); cwFail.set(cwFailures)
-    ddRows.clear(); cwRows.clear(); log.clear()
+    ddRows.clear(); cwRows.clear(); log.clear(); submits.clear()
   }
 }
 
 class TestSink extends BatchSink {
   override def submit(tag: String, rows: Seq[Row]): Unit = {
     SinkState.attempts.incrementAndGet()
+    SinkState.submits.add((tag, rows.map(_.get(0))))
     SinkState.threads.add(Thread.currentThread().getName)
     if (SinkState.failuresToInject.getAndDecrement() > 0)
       throw new RuntimeException("injected sink failure")
@@ -92,6 +95,67 @@ class StreamingSpec extends SparkSpec {
 
   private val regionLine =
     """2017-08-15T18:39:07.000000+00:00 my-hostname production--my-app/arn[3337]: {"dim1":"d","region":"us-west-2","value":1,"_kvmeta":{"team":"t","routes":[{"type":"alerts","series":"ContainerExitCount","dimensions":["dim1"],"stat_type":"counter","value_field":"value","rule":"exit"}]}}"""
+
+  private val badHeader = "not a log line at all"
+  private val badRoute =
+    """2017-08-15T18:39:07.000000+00:00 h production--app/arn[1]: {"bad":{"x":1},"_kvmeta":{"team":"t","routes":[{"type":"alerts","series":"s","dimensions":["bad"],"stat_type":"counter","value_field":"v","rule":"r1"}]}}"""
+
+  /** What the jobs of one streaming micro-batch ran. */
+  private final case class BatchShape(jobs: Int, stages: Int, tasks: Int, shuffleBytes: Long)
+
+  /** Runs `body`, which runs a streaming query and returns its id, under a
+    * SparkListener, and returns that query's micro-batches by batch id —
+    * jobs keyed by their `sql.streaming.queryId` / `streaming.sql.batchId`
+    * properties, with their stages and tasks. */
+  private def batchShapes(body: => String): Map[Long, BatchShape] = {
+    import java.util.concurrent.{ConcurrentHashMap, CountDownLatch, TimeUnit}
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart,
+      SparkListenerTaskEnd}
+    val sc = spark.sparkContext
+    val fence = java.util.UUID.randomUUID().toString
+    val fenceJobs = ConcurrentHashMap.newKeySet[Int]()
+    val fenced = new CountDownLatch(1)
+    // (query id, batch id) of every job and stage; (stage, shuffle bytes) of every task
+    val jobBatch = new ConcurrentLinkedQueue[((String, Long), Seq[Int])]()
+    val stageBatch = new ConcurrentHashMap[Int, (String, Long)]()
+    val taskEnds = new ConcurrentLinkedQueue[(Int, Long)]()
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit = {
+        val props = Option(js.properties)
+        for {
+          p <- props
+          q <- Option(p.getProperty("sql.streaming.queryId"))
+          b <- Option(p.getProperty("streaming.sql.batchId"))
+        } {
+          jobBatch.add(((q, b.toLong), js.stageIds))
+          js.stageIds.foreach(stageBatch.put(_, (q, b.toLong)))
+        }
+        if (props.exists(_.getProperty("graft.test.fence") == fence)) fenceJobs.add(js.jobId)
+      }
+      override def onTaskEnd(te: SparkListenerTaskEnd): Unit =
+        taskEnds.add((te.stageId,
+          Option(te.taskMetrics).map(_.shuffleWriteMetrics.bytesWritten).getOrElse(0L)))
+      override def onJobEnd(je: SparkListenerJobEnd): Unit =
+        if (fenceJobs.contains(je.jobId)) fenced.countDown()
+    }
+    sc.addSparkListener(listener)
+    val queryId =
+      try {
+        val id = body
+        // the listener bus is FIFO: once the fence job's end arrives, every
+        // event of the query's batches before it has been seen
+        sc.setLocalProperty("graft.test.fence", fence)
+        try sc.parallelize(Seq(1), 1).count() finally sc.setLocalProperty("graft.test.fence", null)
+        assert(fenced.await(30, TimeUnit.SECONDS), "listener bus never drained")
+        id
+      } finally sc.removeSparkListener(listener)
+    val tasks = taskEnds.asScala.toSeq.flatMap { case (st, bytes) =>
+      Option(stageBatch.get(st)).map(_ -> bytes) }
+    jobBatch.asScala.toSeq.filter(_._1._1 == queryId).groupBy(_._1._2).map { case (b, js) =>
+      val ts = tasks.filter(_._1 == (queryId, b)).map(_._2)
+      b -> BatchShape(js.size, js.flatMap(_._2).distinct.size, ts.size, ts.sum)
+    }
+  }
 
   test("streaming delivery: per-tag grouping, retry on transient failure") {
     implicit val sqlCtx = spark.sqlContext
@@ -260,66 +324,117 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("deliver writes no shuffle bytes: delivery stays in the source partitions") {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart,
-      SparkListenerTaskEnd}
     implicit val sqlCtx = spark.sqlContext
     SinkState.reset()
-    val sc = spark.sparkContext
+    val dlq = Files.createTempDirectory("graft-dlq-noshuffle").toString + "/failed"
     val ms = MemoryStream[String]
     // two blocks before the start: the first batch has two source partitions
-    ms.addData(golden, "not a log line at all")
+    ms.addData(golden, badHeader)
     ms.addData(regionLine)
     val raw = ms.toDF().withColumnRenamed("value", "raw")
-    val fence = java.util.UUID.randomUUID().toString
-    val stageQuery = new java.util.concurrent.ConcurrentHashMap[Int, String]()
-    val fenceJobs = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
-    val fenced = new java.util.concurrent.CountDownLatch(1)
-    // (query id, shuffle bytes written) of every task of a streaming query
-    val taskEnds = new ConcurrentLinkedQueue[(String, Long)]()
-    val listener = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit = {
-        val props = Option(js.properties)
-        props.flatMap(p => Option(p.getProperty("sql.streaming.queryId")))
-          .foreach(id => js.stageIds.foreach(stageQuery.put(_, id)))
-        if (props.exists(_.getProperty("graft.test.fence") == fence)) fenceJobs.add(js.jobId)
-      }
-      override def onTaskEnd(te: SparkListenerTaskEnd): Unit =
-        Option(stageQuery.get(te.stageId)).filter(_ => te.taskMetrics != null).foreach { id =>
-          taskEnds.add((id, te.taskMetrics.shuffleWriteMetrics.bytesWritten))
-        }
-      override def onJobEnd(je: SparkListenerJobEnd): Unit =
-        if (fenceJobs.contains(je.jobId)) fenced.countDown()
+    // with a deadLetterPath and a poison line, so the parse spill's write
+    // counts too: it reads delivery's cached output, in its partitions
+    val shapes = batchShapes {
+      val q = StreamPipeline
+        .deliver(raw, Config("test-env", triggerInterval = "1 seconds", deadLetterPath = Some(dlq)),
+          new TestSink, Some(new TestCwSink))
+        .start()
+      try q.processAllAvailable() finally q.stop()
+      q.id.toString
     }
-    sc.addSparkListener(listener)
-    val queryId =
-      try {
-        // no deadLetterPath: its `dead.isEmpty` probe gathers one row per
-        // partition through a single-partition exchange, outside delivery
-        val q = StreamPipeline
-          .deliver(raw, Config("test-env", triggerInterval = "1 seconds"),
-            new TestSink, Some(new TestCwSink))
-          .start()
-        try q.processAllAvailable() finally q.stop()
-        // the listener bus is FIFO: once the fence job's end arrives, every
-        // task end of the delivery batch before it has been seen
-        sc.setLocalProperty("graft.test.fence", fence)
-        try sc.parallelize(Seq(1), 1).count() finally sc.setLocalProperty("graft.test.fence", null)
-        assert(fenced.await(30, java.util.concurrent.TimeUnit.SECONDS), "listener bus never drained")
-        q.id.toString
-      } finally sc.removeSparkListener(listener)
-    val ours = taskEnds.asScala.toSeq.filter(_._1 == queryId)
     assert(SinkState.delivered.asScala.map(_._2).sum === 2)
-    assert(ours.size >= 2, s"expected a task per source partition, saw ${ours.size}")
-    assert(ours.map(_._2).sum === 0L, s"deliver wrote ${ours.map(_._2).sum} shuffle bytes")
+    assert(spark.read.parquet(dlq + "/parse").count() === 1)
+    val tasks = shapes.values.map(_.tasks).sum
+    val bytes = shapes.values.map(_.shuffleBytes).sum
+    assert(tasks >= 2, s"expected a task per source partition, saw $tasks")
+    assert(bytes === 0L, s"deliver wrote $bytes shuffle bytes")
+  }
+
+  test("deliver job shape: a clean micro-batch is one job of one stage, a poison batch two jobs") {
+    implicit val sqlCtx = spark.sqlContext
+    SinkState.reset()
+    val dlq = Files.createTempDirectory("graft-dlq-shape").toString + "/failed"
+    val ms = MemoryStream[String]
+    val raw = ms.toDF().withColumnRenamed("value", "raw")
+    val shapes = batchShapes {
+      val q = StreamPipeline
+        .deliver(raw, Config("test-env", triggerInterval = "1 seconds", deadLetterPath = Some(dlq)),
+          new TestSink, Some(new TestCwSink))
+        .start()
+      try {
+        ms.addData(golden, regionLine)
+        q.processAllAvailable()
+        ms.addData(golden, badHeader, badRoute)
+        q.processAllAvailable()
+      } finally q.stop()
+      q.id.toString
+    }
+    assert(shapes.keySet === Set(0L, 1L), shapes.toString)
+    assert((shapes(0L).jobs, shapes(0L).stages) === ((1, 1)), s"clean batch: ${shapes(0L)}")
+    // delivery, then the parse spill's write
+    assert(shapes(1L).jobs <= 2, s"poison batch: ${shapes(1L)}")
+    assert(SinkState.delivered.asScala.map(_._2).sum === 3)
+  }
+
+  test("a faultless batch without poison lines leaves no dead-letter file") {
+    implicit val sqlCtx = spark.sqlContext
+    SinkState.reset()
+    val dlq = Files.createTempDirectory("graft-dlq-clean").toString + "/failed"
+    val ms = MemoryStream[String]
+    val raw = ms.toDF().withColumnRenamed("value", "raw")
+    val q = StreamPipeline
+      .deliver(raw, Config("test-env", triggerInterval = "1 seconds", deadLetterPath = Some(dlq)),
+        new TestSink, Some(new TestCwSink))
+      .start()
+    try {
+      ms.addData(golden, regionLine)
+      q.processAllAvailable()
+    } finally q.stop()
+    assert(SinkState.delivered.asScala.map(_._2).sum === 2)
+    Seq("sink", "parse").foreach { d =>
+      val parts = Option(new java.io.File(dlq, d).listFiles).toSeq.flatten
+        .map(_.getName).filter(_.startsWith("part-"))
+      assert(parts.isEmpty, s"$d/: $parts")
+    }
+  }
+
+  test("delivery runs once when both dead-letter directories are written") {
+    implicit val sqlCtx = spark.sqlContext
+    SinkState.reset(failures = 1000) // dd never succeeds
+    val dlq = Files.createTempDirectory("graft-dlq-once").toString + "/failed"
+    val ms = MemoryStream[String]
+    val raw = ms.toDF().withColumnRenamed("value", "raw")
+    val q = StreamPipeline
+      .deliver(
+        raw,
+        Config("test-env", triggerInterval = "1 seconds", retryAttempts = 2, retryBaseMs = 1,
+          deadLetterPath = Some(dlq)),
+        new TestSink, Some(new TestCwSink)
+      )
+      .start()
+    try {
+      ms.addData(golden, badHeader, regionLine, badRoute)
+      q.processAllAvailable()
+    } finally q.stop()
+    // one flush per tag, each attempted exactly retryAttempts times: the
+    // spill writes read delivery's output and never submit again
+    val attempts = SinkState.submits.asScala.toSeq.groupBy(identity).values.map(_.size).toSeq
+    assert(attempts === Seq(2, 2), SinkState.submits.toString)
+    assert(SinkState.submits.asScala.map(_._1).toSet === Set("default", "us-west-2"))
+    assert(SinkState.cwAttempts.get() === 0) // cw never submitted after dd failure
+    val parse = spark.read.parquet(dlq + "/parse").select("raw").as[String].collect()
+    assert(parse.sorted.toSeq === Seq(badHeader, badRoute).sorted)
+    val expected = graft.fast.FastKayvee.unified(Seq(golden, regionLine).toDF("raw"), "test-env")
+      .toDF().select("kind", "tag", "dd", "cw").collect().map(_.toString)
+    val spilled = spark.read.parquet(dlq + "/sink").collect().map(_.toString)
+    assert(expected.map(_.take(3)).toSet === Set("[dd", "[cw"))
+    assert(spilled.sorted.toSeq === expected.sorted.toSeq)
   }
 
   test("parse/projection failures land under deadLetterPath/parse with the raw record") {
     implicit val sqlCtx = spark.sqlContext
     SinkState.reset()
     val dlq = Files.createTempDirectory("graft-dlq-parse").toString + "/failed"
-    val badHeader = "not a log line at all"
-    val badRoute =
-      """2017-08-15T18:39:07.000000+00:00 h production--app/arn[1]: {"bad":{"x":1},"_kvmeta":{"team":"t","routes":[{"type":"alerts","series":"s","dimensions":["bad"],"stat_type":"counter","value_field":"v","rule":"r1"}]}}"""
     val ms = MemoryStream[String]
     val raw = ms.toDF().withColumnRenamed("value", "raw")
     val q = StreamPipeline
