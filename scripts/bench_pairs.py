@@ -6,7 +6,9 @@
 Exports the committed files of <parent-rev> and of HEAD with `git archive`
 into their own directories under scratch-dir (default: bench_pairs in the
 system temp directory; a checkout already there for the same commit is
-reused, with its build), then runs `alertbench/run.py --trace 0` in each,
+reused, with its build). Keep scratch-dir short: the harness's sbt build
+binds a unix socket about 70 bytes below it, and socket paths end at 107
+bytes. Then it runs `alertbench/run.py --trace 0` in each,
 n pairs on seeds first-seed .. first-seed+n-1. Odd pairs run the parent
 first, even pairs the change first; both sides of a pair use the same
 seed, and the window length is BENCHMARK.json's run_seconds.
@@ -14,7 +16,7 @@ seed, and the window length is BENCHMARK.json's run_seconds.
 Prints every run (correct, failed operations, the end-to-end metrics), the
 per-run table and the medians with the parent's interquartile range, and
 for each metric the pairs the change won. Each run's stderr is kept beside
-its checkout as run-<workload>-<seed>.log.
+its checkout as run-<checkout>-<workload>-<seed>.log.
 """
 import json
 import os
@@ -43,7 +45,7 @@ def git(*args):
 
 def checkout(rev, scratch, label):
     sha = git("rev-parse", "--verify", rev + "^{commit}")
-    d = os.path.join(scratch, f"{label}-{sha[:12]}")
+    d = os.path.join(scratch, f"{label}-{sha[:10]}")
     if not os.path.isdir(d):
         tmp = d + ".partial"
         os.makedirs(tmp, exist_ok=True)
@@ -64,6 +66,8 @@ def run(d, workload, seed, seconds):
                            cwd=d, stdout=subprocess.PIPE, stderr=err, stdin=subprocess.DEVNULL,
                            text=True)
     lines = [l for l in p.stdout.splitlines() if l.strip()]
+    if p.returncode == 3:  # run.py: the sbt build failed
+        sys.exit(f"build failed in {d}; see {log}")
     if p.returncode != 0 or not lines:
         print(f"  run failed in {d} (exit {p.returncode}); stderr in {log}", flush=True)
         return None
@@ -91,8 +95,8 @@ def main(argv):
     seconds = spec["run_seconds"]
     lower_better = {m["name"]: m["better"] == "lower" for m in spec["end_to_end"]}
     os.makedirs(scratch, exist_ok=True)
-    psha, pdir = checkout(parent_rev, scratch, "parent")
-    csha, cdir = checkout("HEAD", scratch, "change")
+    psha, pdir = checkout(parent_rev, scratch, "p")
+    csha, cdir = checkout("HEAD", scratch, "c")
     print(f"{workload}: parent {psha[:12]} | change {csha[:12]}, {n} pairs, seeds "
           f"{first_seed}-{first_seed + n - 1}, {seconds} s windows", flush=True)
 
