@@ -169,8 +169,9 @@ object Delivery {
     * full, and every tag at partition end. Executor memory is
     * O(distinct tags × batchCount) rows per task — the same per-shard
     * bound as the reference's ≤100 buffered records per tag
-    * (`main.go:56`), never O(partition) — plus the partition's dead
-    * letters.
+    * (`main.go:56`), never O(partition) — plus the `kind = "dead"` rows
+    * the input carries, which are returned (a caller with no dead-letter
+    * path drops them before this call) — plus the failed records.
     *
     * Per flush: submits the dd rows with retry, then — only after a fully
     * successful dd flush, mirroring the early return at

@@ -108,7 +108,10 @@ object StreamPipeline {
     val sc = unified.sparkSession.sparkContext
     val deadRows = sc.longAccumulator
     val failedRows = sc.longAccumulator
-    val out = unified.mapPartitions { it =>
+    // without a dead-letter path nothing reads the dead rows: drop them in
+    // the same stage, so no task buffers them
+    val in = if (cfg.deadLetterPath.isEmpty) unified.filter(col("kind") =!= "dead") else unified
+    val out = in.mapPartitions { it =>
       Delivery.deliverPartition(it, sink, cwSink, cfg.retryAttempts, cfg.retryBaseMs,
         cfg.batchCount, cfg.cwRegions, deadRows, failedRows)
     }(org.apache.spark.sql.Encoders.row(unified.schema))

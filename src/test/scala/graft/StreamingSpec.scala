@@ -100,13 +100,14 @@ class StreamingSpec extends SparkSpec {
   private val badRoute =
     """2017-08-15T18:39:07.000000+00:00 h production--app/arn[1]: {"bad":{"x":1},"_kvmeta":{"team":"t","routes":[{"type":"alerts","series":"s","dimensions":["bad"],"stat_type":"counter","value_field":"v","rule":"r1"}]}}"""
 
-  /** What the jobs of one streaming micro-batch ran. */
-  private final case class BatchShape(jobs: Int, stages: Int, tasks: Int, shuffleBytes: Long)
+  /** What the jobs of one streaming micro-batch ran: tasks per job in job
+    * order, and shuffle bytes over all of them. */
+  private final case class BatchShape(jobs: Int, stages: Int, jobTasks: Seq[Int], shuffleBytes: Long)
 
   /** Runs `body`, which runs a streaming query and returns its id, under a
     * SparkListener, and returns that query's micro-batches by batch id —
     * jobs keyed by their `sql.streaming.queryId` / `streaming.sql.batchId`
-    * properties, with their stages and tasks. */
+    * properties, with their stages and each job's tasks. */
   private def batchShapes(body: => String): Map[Long, BatchShape] = {
     import java.util.concurrent.{ConcurrentHashMap, CountDownLatch, TimeUnit}
     import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart,
@@ -115,8 +116,9 @@ class StreamingSpec extends SparkSpec {
     val fence = java.util.UUID.randomUUID().toString
     val fenceJobs = ConcurrentHashMap.newKeySet[Int]()
     val fenced = new CountDownLatch(1)
-    // (query id, batch id) of every job and stage; (stage, shuffle bytes) of every task
-    val jobBatch = new ConcurrentLinkedQueue[((String, Long), Seq[Int])]()
+    // (query id, batch id) of every job, with its id and stages, and of
+    // every stage; (stage, shuffle bytes) of every task
+    val jobBatch = new ConcurrentLinkedQueue[((String, Long), Int, Seq[Int])]()
     val stageBatch = new ConcurrentHashMap[Int, (String, Long)]()
     val taskEnds = new ConcurrentLinkedQueue[(Int, Long)]()
     val listener = new SparkListener {
@@ -127,7 +129,7 @@ class StreamingSpec extends SparkSpec {
           q <- Option(p.getProperty("sql.streaming.queryId"))
           b <- Option(p.getProperty("streaming.sql.batchId"))
         } {
-          jobBatch.add(((q, b.toLong), js.stageIds))
+          jobBatch.add(((q, b.toLong), js.jobId, js.stageIds))
           js.stageIds.foreach(stageBatch.put(_, (q, b.toLong)))
         }
         if (props.exists(_.getProperty("graft.test.fence") == fence)) fenceJobs.add(js.jobId)
@@ -151,9 +153,11 @@ class StreamingSpec extends SparkSpec {
       } finally sc.removeSparkListener(listener)
     val tasks = taskEnds.asScala.toSeq.flatMap { case (st, bytes) =>
       Option(stageBatch.get(st)).map(_ -> bytes) }
+    val stageTasks = taskEnds.asScala.toSeq.groupBy(_._1).map { case (st, ts) => st -> ts.size }
     jobBatch.asScala.toSeq.filter(_._1._1 == queryId).groupBy(_._1._2).map { case (b, js) =>
-      val ts = tasks.filter(_._1 == (queryId, b)).map(_._2)
-      b -> BatchShape(js.size, js.flatMap(_._2).distinct.size, ts.size, ts.sum)
+      val bytes = tasks.filter(_._1 == (queryId, b)).map(_._2).sum
+      val jobTasks = js.sortBy(_._2).map(_._3.map(stageTasks.getOrElse(_, 0)).sum)
+      b -> BatchShape(js.size, js.flatMap(_._3).distinct.size, jobTasks, bytes)
     }
   }
 
@@ -344,9 +348,11 @@ class StreamingSpec extends SparkSpec {
     }
     assert(SinkState.delivered.asScala.map(_._2).sum === 2)
     assert(spark.read.parquet(dlq + "/parse").count() === 1)
-    val tasks = shapes.values.map(_.tasks).sum
-    val bytes = shapes.values.map(_.shuffleBytes).sum
-    assert(tasks >= 2, s"expected a task per source partition, saw $tasks")
+    assert(shapes.keySet === Set(0L), shapes.toString)
+    // the batch's first job is delivery: one task per source partition
+    val deliveryTasks = shapes(0L).jobTasks.head
+    assert(deliveryTasks >= 2, s"expected a delivery task per source partition, saw $deliveryTasks")
+    val bytes = shapes(0L).shuffleBytes
     assert(bytes === 0L, s"deliver wrote $bytes shuffle bytes")
   }
 
