@@ -6,11 +6,15 @@
 # Verify + check_oracle.py at ALL THREE fixture SFs keeps that class of
 # boundary-only divergences structurally caught.
 #
-# Usage: scripts/gate_tri_sf.sh [outRoot]   (default /tmp/graft_gate)
-# Exit 0 iff every declared oracle passes at every SF.
+# Usage: scripts/gate_tri_sf.sh [outRoot] [lane...]   (default /tmp/graft_gate)
+# With lane names, Verify dumps and check_oracle.py checks only those
+# lanes; with none, all declared lanes.
+# Exit 0 iff every declared (or named) oracle passes at every SF.
 set -u
 cd "$(dirname "$0")/.."
 OUT="${1:-/tmp/graft_gate}"
+shift $(( $# > 0 ? 1 : 0 ))
+LANES="$*"
 mkdir -p "$OUT"
 fail=0
 for sf in sf0.001 sf0.01 sf0.1; do
@@ -18,7 +22,7 @@ for sf in sf0.001 sf0.01 sf0.1; do
   out="$OUT/$sf"
   rm -rf "$out"
   echo "== Verify @ $sf"
-  sbt "runMain graft.Verify $dir $out" >"$OUT/verify_$sf.log" 2>&1 || {
+  sbt "runMain graft.Verify $dir $out $LANES" >"$OUT/verify_$sf.log" 2>&1 || {
     echo "VERIFY FAILED @ $sf (see $OUT/verify_$sf.log)"; fail=1; continue; }
   echo "== Oracle gate @ $sf"
   # rely on check_oracle.py's exit status (1 on any failure), not on the

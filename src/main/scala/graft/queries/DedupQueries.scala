@@ -605,7 +605,7 @@ object DedupQueries {
     // ★ SemDeDup — cluster-then-prune semantic dedup (Abbas et al. 2023,
     // arXiv:2303.09540): the OTHER canonical embedding-dedup shape next to
     // q_dedup_embed's LSH bands. K-means-style cells (the shared
-    // IvfProvision centroids — same provisioning knob as the ANN family)
+    // IvfProvision centroids — same provisioning rule as the ANN family)
     // bound the pair scan: candidates are ALL pairs within a cell, verify
     // is exact cosine ≥ 0.98, dup groups are connected components, and the
     // kept representative per group is the member FARTHEST from its
@@ -613,9 +613,9 @@ object DedupQueries {
     // keep-the-diverse-example rule. Output is the full kept/pruned corpus
     // assignment, what a curation pipeline actually consumes.
     // Scale: within-cell pair work is Σ c² with c ≈ n/K, so K is the
-    // provisioning bound (graft.ivf.cells; a 100 TB deployment sets
-    // K ∝ n / target-cell-size, making within-cell work linear in n —
-    // exactly the paper's 50k-cluster regime); centroids broadcast
+    // provisioning bound (IvfProvision derives K ≈ √(n/W) from the
+    // corpus, so within-cell work grows as n^1.5·√W, not n² — toward
+    // the paper's 50k-cluster regime); centroids broadcast
     // (K rows, plan-limited), assignment is the map-side-combinable
     // assignCells kernel, CC runs over verified edges only. The method's
     // documented tradeoff — twins split by a cell boundary are missed —

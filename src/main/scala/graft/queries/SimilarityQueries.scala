@@ -59,8 +59,8 @@ object SimilarityQueries {
     * Cell width is then ~√(n·W), so the within-2-cell candidate term is
     * K·(2n/K)² = O(n^1.5·√W) and per-probe serving bytes are O(√(n·W)) —
     * the self-provisioning point between the two failure modes. The
-    * floor (the old `graft.ivf.cells` knob, default 5) reproduces the
-    * fixture-scale seed sets at sf0.001/sf0.01 (n=500 → K=5); the cap
+    * floor (5) reproduces the fixture-scale seed sets at sf0.001/sf0.01
+    * (n=500 → K=5); the cap
     * (65536) keeps the centroid collect/broadcast driver-safe at any
     * corpus size — derived K stays under it until n ≥ W·cap² ≈ 1.4e11
     * vectors (1B vectors → K=5591; at the cap the broadcast is ≤ 34 MB
@@ -77,43 +77,19 @@ object SimilarityQueries {
     * is exact at any SF (ProvisionDerivationSpec pins Scala ≡ SQL at two
     * different n). */
   private[graft] object IvfProvision {
-    /** FLOOR cell count — the deployment config knob (JVM property
-      * `graft.ivf.cells`, read once so the Spark lanes and the generated
-      * oracle SQL always agree). Default 5 reproduces the fixture-scale
-      * seed sets at sf0.001/sf0.01 that the retrain-trigger behavior is
-      * pinned against; the derived rule takes over as soon as
-      * ceilSqrt(n/W) exceeds it. Lazy (round-15 ADVICE): validating
-      * inside the object initializer surfaced as
-      * ExceptionInInitializerError wrapping the real cause. */
-    lazy val cells: Int = {
-      val raw = sys.props.getOrElse("graft.ivf.cells", "5")
-      // validate at first use (round-14/15 ADVICE): a bare .toInt
-      // surfaced as an opaque error, 0 as a divide-by-zero inside
-      // stride(), and a negative value as a silently empty seed
-      // set — every IVF lane serving nothing
-      val parsed = try raw.toInt catch {
-        case _: NumberFormatException => throw new IllegalArgumentException(
-          s"graft.ivf.cells must be a positive integer, got '$raw'")
-      }
-      require(parsed >= 1, s"graft.ivf.cells must be >= 1, got $parsed")
-      parsed
-    }
+    /** FLOOR cell count. 5 reproduces the fixture-scale seed sets at
+      * sf0.001/sf0.01 that the retrain-trigger behavior is pinned
+      * against; the derived rule takes over as soon as ceilSqrt(n/W)
+      * exceeds it. */
+    val cells: Int = 5
 
-    /** Target mean cell width W for the derived rule (JVM property
-      * `graft.ivf.width`). 32 puts the fixture corpora right at the
-      * derivation boundary (sf0.001/sf0.01 n=500 → derived 4, floored to
-      * 5 — byte-identical to the static era; sf0.1 n=2000 → K=8; the
-      * 3×-slice probe n=6000 → K=14), so the derived path is EXERCISED
-      * by the tri-SF gate instead of hiding under the floor. */
-    lazy val targetWidth: Int = {
-      val raw = sys.props.getOrElse("graft.ivf.width", "32")
-      val parsed = try raw.toInt catch {
-        case _: NumberFormatException => throw new IllegalArgumentException(
-          s"graft.ivf.width must be a positive integer, got '$raw'")
-      }
-      require(parsed >= 1, s"graft.ivf.width must be >= 1, got $parsed")
-      parsed
-    }
+    /** Target mean cell width W for the derived rule. 32 puts the fixture
+      * corpora right at the derivation boundary (sf0.001/sf0.01 n=500 →
+      * derived 4, floored to 5 — byte-identical to the static era; sf0.1
+      * n=2000 → K=8; the 3×-slice probe n=6000 → K=14), so the derived
+      * path is EXERCISED by the tri-SF gate instead of hiding under the
+      * floor. */
+    val targetWidth: Int = 32
 
     /** Cap on the derived cell count: bounds the centroid driver collect
       * and broadcast at ANY corpus size (the round-12 contract, kept). */
@@ -2471,9 +2447,11 @@ object SimilarityQueries {
     * serving lanes' output shape (q_id, vec_id, rank, cos). */
   private[graft] def graphTop5(gall: DataFrame, v: DataFrame, qv: DataFrame): DataFrame = {
     import graft.functions.VectorExpressions.cosineSimilarity
-    // candidate-side broadcast — see graphSeedCands (round-21, §3.1)
+    // no broadcast hint on gall (unlike graphSeedCands' p1cand): it is
+    // persisted, so the planner sees its real size and broadcasts it only
+    // while it fits; gall grows with graph degree and corpus size
     twoPhaseRank(
-      broadcast(gall).join(v.select(col("vec_id"), col("e")), "vec_id")
+      gall.join(v.select(col("vec_id"), col("e")), "vec_id")
         .join(broadcast(qv.withColumnRenamed("q_id", "sq")), col("sq") === col("q_id"))
         .withColumn("cos", cosineSimilarity(col("qe"), col("e")))
         .select(col("q_id"), col("vec_id"), col("cos")),
@@ -2497,7 +2475,7 @@ object SimilarityQueries {
     * sf0.01, 17→23 at sf0.1) for a serving cost of ≤ L·M·(1+M) extra
     * exact evals per query (vs ~corpus/K for probe-2's second cell).
     * Scale: the build is the SemDeDup/IVF cell shape (Σ c² pairs within
-    * 2-cell buckets, K provisioned via graft.ivf.cells), edges are a
+    * 2-cell buckets, K derived by [[IvfProvision]]), edges are a
     * WindowGroupLimit top-M — the graph is O(n·M) rows, partitionable by
     * u; serving touches one cell partition plus ≤ L·(1+M)·M point
     * lookups keyed on u — exactly the access pattern a bucketed edge
@@ -3481,24 +3459,14 @@ object SimilarityQueries {
     * (GraphLayersDerivationSpec pins Scala ≡ SQL across the boundary
     * Ns). */
   private[graft] object GraphLayers {
-    /** Top-layer node bound — the all-pairs budget cap (JVM property
-      * `graft.graph.ltop`, read once so the Spark lanes and the
-      * generated oracle SQL always agree). Default 64 puts the tri-SF
-      * gate on BOTH sides of the recursion boundary: sf0.001/sf0.01
-      * (base n=375) derive ℓ=1 — byte-identical layer structure to the
-      * single-layer era — while sf0.1 (n=1500 → 1500 div 16 = 93 > 64)
-      * and the 3×-slice probe (n=4500) derive ℓ=2, so the bucketed-
-      * lower-layer path is EXERCISED by the gate instead of hiding
-      * under the base case. */
-    lazy val topBound: Int = {
-      val raw = sys.props.getOrElse("graft.graph.ltop", "64")
-      val parsed = try raw.toInt catch {
-        case _: NumberFormatException => throw new IllegalArgumentException(
-          s"graft.graph.ltop must be a positive integer, got '$raw'")
-      }
-      require(parsed >= 1, s"graft.graph.ltop must be >= 1, got $parsed")
-      parsed
-    }
+    /** Top-layer node bound — the all-pairs budget cap. 64 puts the
+      * tri-SF gate on BOTH sides of the recursion boundary:
+      * sf0.001/sf0.01 (base n=375) derive ℓ=1 — byte-identical layer
+      * structure to the single-layer era — while sf0.1 (n=1500 → 1500
+      * div 16 = 93 > 64) and the 3×-slice probe (n=4500) derive ℓ=2, so
+      * the bucketed-lower-layer path is EXERCISED by the gate instead of
+      * hiding under the base case. */
+    val topBound: Int = 64
 
     /** Static unroll depth of the ORACLE text only (SQL cannot grow
       * structure from data). The Scala derivation is UNBOUNDED — at
@@ -3555,67 +3523,6 @@ object SimilarityQueries {
   private[graft] val graphL1BeamWidth = 2
   private[graft] val graphL1Rounds = 1
 
-  /** NN-descent refinement rounds applied to every upper layer's edge
-    * set after the initial candidate rule (round-18 verdict item 4 —
-    * "use the hierarchy being built at build time", expressed as the
-    * published neighbor-of-neighbor iteration of Dong et al. 2011,
-    * which is HNSW-insert's effect without its sequential insertion
-    * order): each round candidates = current edges ∪ both-direction
-    * 2-hop pairs, re-ranked exact top-M. On the all-pairs TOP layer the
-    * rounds are an exact identity (candidates ⊆ all pairs and the
-    * standing top-M always survives the rank — the total order is
-    * (cos DESC, w)), so the rule applies uniformly and the oracle
-    * unrolls it for every layer without an arm split. Cost per round is
-    * O(n_j·4M²) candidate pairs — linear in the layer, and the layer
-    * populations are a 16× geometric series, so the whole refinement
-    * stays inside the hierarchy's ~1/256-of-layer-0 build budget.
-    * JVM property `graft.graph.refine` (read once, shared with the
-    * generated oracle text — the graft.ivf.cells pattern) so the sweep
-    * harness can A/B the rounds. DEFAULT 0 — off — from the round-19
-    * measurements (docs/SCALING.md): the candidate-source hypothesis
-    * was ceiling-tested by serving with byte-exact all-pairs upper
-    * edges and recall did NOT move (11/40 either way under the old
-    * round split), two refinement rounds brought the refined layer-1 to
-    * 92% of exact with zero serving effect, and the rounds cost 2.4×
-    * the whole hierarchy build phase at sf0.1 (1.96 → 4.80 s). The
-    * machinery stays property-pinned (GraphIndexSpec) and
-    * sweep-reachable for a corpus whose bucket rule actually starves —
-    * the repair property is real — but it is not paid for by default. */
-  private[graft] lazy val graphLayerRefineRounds: Int = {
-    val raw = sys.props.getOrElse("graft.graph.refine", "0")
-    val parsed = try raw.toInt catch {
-      case _: NumberFormatException => throw new IllegalArgumentException(
-        s"graft.graph.refine must be a non-negative integer, got '$raw'")
-    }
-    require(parsed >= 0, s"graft.graph.refine must be >= 0, got $parsed")
-    parsed
-  }
-
-  /** One NN-descent pass over a layer's (u, w) edge frame: candidates =
-    * edges ∪ 2-hop pairs through the BIDIRECTED edge set, exact top-M
-    * re-rank against the layer's vectors. Exposed private[graft] so
-    * GraphIndexSpec can pin the two properties the lane relies on:
-    * identity on an exact top-M graph, and reachability repair on a
-    * bucket-blind initialization. */
-  private[graft] def refineLayerEdges(edges0: DataFrame, lj: DataFrame,
-      rounds: Int): DataFrame = {
-    // each round references the previous edge frame three times (both
-    // union directions + the candidate union) — every round lands as an
-    // EAGER leaf or the chained plan recomputes the whole upstream per
-    // reference per round (measured 1.96 → 20.7 s build at sf0.1 before
-    // the leaves; 2.6 s with them — the round-18 re-analysis lesson)
-    var edges = if (rounds > 0) edges0.localCheckpoint(true) else edges0
-    (1 to rounds).foreach { _ =>
-      val bi = edges.unionByName(edges.select(col("w").as("u"), col("u").as("w")))
-      val nn2 = bi.select(col("u"), col("w").as("x"))
-        .join(bi.select(col("u").as("x"), col("w")), "x")
-        .select(col("u"), col("w"))
-        .filter(col("u") =!= col("w"))
-      edges = graphEdgesFrom(nn2.unionByName(edges).distinct(), lj, lj)
-        .localCheckpoint(true)
-    }
-    edges
-  }
   /** Layer-0 width/rounds for the LAYERED lane — wider than the flat
     * beam's (W=4, B=3) because quantizer-free entry points start at
     * ~rank-16 (the best of a 1/16 sample) instead of the probe-1 cell's
@@ -3756,7 +3663,7 @@ object SimilarityQueries {
           }
         val dirF = graft.plans.ScratchDirs.unique(s"graft-knn-graph-l$j")
         val tbl = dirF.getName.replace('-', '_').replace('.', '_')
-        refineLayerEdges(graphEdgesFrom(cand, lj, lj), lj, graphLayerRefineRounds)
+        graphEdgesFrom(cand, lj, lj)
           .repartition(graphIndexBuckets, col("u"))
           .write.mode("overwrite")
           .bucketBy(graphIndexBuckets, "u").sortBy("u")
@@ -3977,32 +3884,10 @@ object SimilarityQueries {
   private lazy val annRecallBeamLayeredSql: String = {
     val cosAb = "list_sum(list_transform(generate_series(1, 64), i -> a.e[i] * b.e[i])) / (a.nrm * b.nrm)"
     val LMAX = GraphLayers.sqlMaxLayers
-    val R = graphLayerRefineRounds
     val layerCtes = (1 to LMAX).map { j =>
       val p = GraphLayers.pow16(j)
-      // NN-descent refinement unrolled per layer (graphLayerRefineRounds
-      // rounds, the Spark loop's text): candidates = previous edges ∪
-      // both-direction 2-hop pairs, exact top-M re-rank. On the
-      // all-pairs top layer every round is an exact identity, so no
-      // lprm arm split is needed here.
-      // every lgraph_*_r node is MATERIALIZED: DuckDB inlines plain CTEs
-      // per reference, and the refinement chain references its
-      // predecessor three times per round — un-materialized, the
-      // descent's per-round graph references would re-evaluate an
-      // exponentially unrolled tree
-      val refine = (1 to R).map { r =>
-        s""",
-           |lbi_${j}_$r AS (
-           |  SELECT u, w FROM lgraph_${j}_r${r - 1}
-           |  UNION ALL SELECT w AS u, u AS w FROM lgraph_${j}_r${r - 1}),
-           |lnn_${j}_$r AS (
-           |  SELECT DISTINCT u, w FROM (
-           |    SELECT a.u, b.w FROM lbi_${j}_$r a JOIN lbi_${j}_$r b
-           |      ON a.w = b.u WHERE a.u <> b.w
-           |    UNION ALL SELECT u, w FROM lgraph_${j}_r${r - 1}) nn),
-           |${graphEdgesSql(s"lnn_${j}_$r", s"lgt_${j}_r$r")},
-           |lgraph_${j}_r$r AS MATERIALIZED (SELECT u, w FROM lgt_${j}_r$r)""".stripMargin
-      }.mkString("")
+      // lgraph_j is MATERIALIZED: DuckDB inlines plain CTEs per
+      // reference, and every descent round over layer j references it
       s"""lj_$j AS (SELECT t.* FROM nb t CROSS JOIN lprm WHERE t.vec_id % $p = 0 AND $j <= lprm.l),
          |la2_$j AS (SELECT a.vec_id, a.c_id FROM basea2 a JOIN lj_$j t ON a.vec_id = t.vec_id),
          |ljc_$j AS (
@@ -4018,9 +3903,8 @@ object SimilarityQueries {
          |  SELECT a.vec_id AS u, b.vec_id AS w
          |  FROM lj_$j a JOIN lj_$j b ON a.vec_id <> b.vec_id
          |  WHERE $j = (SELECT l FROM lprm)),
-         |${graphEdgesSql(s"ljc_$j", s"lgt_${j}_r0")},
-         |lgraph_${j}_r0 AS MATERIALIZED (SELECT u, w FROM lgt_${j}_r0)$refine,
-         |lgraph_$j AS MATERIALIZED (SELECT u, w FROM lgraph_${j}_r$R)""".stripMargin
+         |${graphEdgesSql(s"ljc_$j", s"lgt_$j")},
+         |lgraph_$j AS MATERIALIZED (SELECT u, w FROM lgt_$j)""".stripMargin
     }.mkString(",\n")
     val layers =
       (LMAX to 1 by -1).flatMap(j =>

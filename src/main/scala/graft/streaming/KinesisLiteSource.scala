@@ -258,6 +258,8 @@ final class KinesisLiteStream(dir: String, startingPosition: String, maxRecords:
     extends MicroBatchStream with SupportsAdmissionControl {
   require(Set("TRIM_HORIZON", "LATEST").contains(startingPosition),
     s"startingPosition must be TRIM_HORIZON or LATEST, got $startingPosition")
+  // 0 would admit nothing per batch: the stream would stall silently
+  require(maxRecords >= 1, s"maxRecordsPerFetch must be >= 1, got $maxRecords")
 
   private def available(): Map[String, Long] =
     KinesisLiteSource.shardFiles(dir)

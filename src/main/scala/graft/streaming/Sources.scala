@@ -89,12 +89,14 @@ object Sources {
 
   /** Spark reader options produced from the KCL envelope (mapping table in
     * the object scaladoc). Validates what the template constrains:
-    * "Valid options at TRIM_HORIZON or LATEST". */
+    * "Valid options at TRIM_HORIZON or LATEST", and a fetch size of at
+    * least one record. */
   def kinesisOptions(cfg: KclConfig): Map[String, String] = {
     require(
       Set("TRIM_HORIZON", "LATEST").contains(cfg.initialPositionInStream),
       s"initialPositionInStream must be TRIM_HORIZON or LATEST, got ${cfg.initialPositionInStream}"
     )
+    require(cfg.maxRecords >= 1, s"maxRecords must be >= 1, got ${cfg.maxRecords}")
     Map(
       "streamName" -> cfg.streamName,
       "region" -> cfg.regionName,

@@ -269,52 +269,6 @@ class GraphIndexSpec extends SparkSpec {
     Bench.cleanup(spark)
   }
 
-  test("layer refinement: identity on an exact top-M graph; repairs a bucket-blind initialization") {
-    import SharedSpark.spark.implicits._
-    // the NN-descent candidate source (round-18 verdict item 4 — the
-    // hierarchy-aware insert expressed as Dong et al.'s published
-    // iteration). Property 1 — IDENTITY on exact edges: refining an
-    // all-pairs top-M graph returns it bit-for-bit (candidates ⊆ all
-    // pairs and the standing top-M survives the (cos DESC, w) rank),
-    // which is why the engine and oracle apply the rounds uniformly to
-    // every layer including the all-pairs top.
-    val lj = Tables(spark, "/root/testdata/sf0.001").embeddings
-      .filter(col("vec_id") % 16 === 0)
-      .select(col("vec_id"),
-        graft.plans.OptimizerBarrier.once(
-          transform(col("embedding"), x => x.cast("double"))).as("e"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val allPairs = broadcast(lj.select(col("vec_id").as("u")))
-      .crossJoin(lj.select(col("vec_id").as("w")))
-      .filter(col("u") =!= col("w"))
-    val exact = SimilarityQueries.graphEdgesFrom(allPairs, lj, lj)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val refinedExact = SimilarityQueries.refineLayerEdges(exact, lj, 2)
-    assert(refinedExact.exceptAll(exact).count() === 0L &&
-      exact.exceptAll(refinedExact).count() === 0L,
-      "refinement must be an exact identity on an all-pairs top-M graph")
-    // Property 2 — REPAIR: from a deliberately bucket-blind
-    // initialization (a directed id-order ring — every node one edge,
-    // no similarity information), two rounds of neighbor-of-neighbor
-    // candidates recover true neighbors the init cannot see: the
-    // refined graph is strictly closer to the exact top-M than the ring.
-    val ids = lj.select(col("vec_id")).orderBy(col("vec_id"))
-      .as[Long].collect()
-    val ring = ids.zip(ids.drop(1) :+ ids.head).toSeq.toDF("u", "w")
-    val refinedRing = SimilarityQueries.refineLayerEdges(ring, lj, 2)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val missedByRing = exact.exceptAll(ring.select(col("u"), col("w"))).count()
-    val missedAfter = exact.exceptAll(refinedRing).count()
-    assert(missedAfter < missedByRing,
-      s"refinement must recover exact neighbors a blind init misses ($missedAfter !< $missedByRing)")
-    // and refined degrees never exceed the budget M
-    val maxDeg = refinedRing.groupBy(col("u")).count()
-      .agg(max(col("count"))).head().getLong(0)
-    assert(maxDeg <= SimilarityQueries.graphDegree)
-    lj.unpersist(); exact.unpersist(); refinedRing.unpersist()
-    Bench.cleanup(spark)
-  }
-
   test("layered lifecycle: the descent serves compacted epochs handed in for BOTH layers") {
     // build the live hierarchy once to obtain its layer-1 store
     val (paths0, _, _) = SimilarityQueries.beamLayeredServe(spark, dir)

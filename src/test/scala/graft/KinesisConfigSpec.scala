@@ -105,6 +105,23 @@ class KinesisConfigSpec extends AnyFunSuite {
     assert(lite.getMessage.contains("TRIM_HORIZON or LATEST"))
   }
 
+  test("a fetch size below one record, or not a number, is rejected on both paths") {
+    // 0 would admit nothing per batch, so the stream would never advance
+    def names(msg: String, v: String) = msg.endsWith(s"got $v") || msg.contains(s"\"$v\"")
+    Seq("0", "-1", "10k").foreach { v =>
+      val kcl = intercept[IllegalArgumentException](Sources.kinesisOptions(Sources.kclConfig(
+        Map("streamName" -> "s", "applicationName" -> "a", "maxRecords" -> v), Map.empty)))
+      assert(names(kcl.getMessage, v), s"maxRecords=$v: ${kcl.getMessage}")
+      // the kinesis-lite reader option, parsed when the query starts
+      val table = new graft.streaming.KinesisLiteTable(Map("path" -> "/nonexistent-stream",
+        "startingPosition" -> "TRIM_HORIZON", "maxRecordsPerFetch" -> v))
+      val lite = intercept[IllegalArgumentException](
+        table.newScanBuilder(org.apache.spark.sql.util.CaseInsensitiveStringMap.empty())
+          .build().toMicroBatchStream("/nonexistent-checkpoint"))
+      assert(names(lite.getMessage, v), s"maxRecordsPerFetch=$v: ${lite.getMessage}")
+    }
+  }
+
   test("unresolvable placeholders surface as-is (missing env is visible, not silent)") {
     val cfg = Sources.kclConfig(Sources.parseProperties(template),
       launchEnv - "KINESIS_STREAM_NAME")

@@ -26,12 +26,9 @@ class PairEmissionGateSpec extends AnyFunSuite {
 
   /** Violations as (line-number, matched marker) pairs. */
   private[graft] def scan(source: String): Seq[(Int, String)] = {
-    val lines = source.linesIterator.toVector.map { l =>
-      val t = l.trim
-      // strip whole-line comments so scaladoc HISTORY of the old shape
-      // (which names collect_list and flatMap) can't false-positive
-      if (t.startsWith("//") || t.startsWith("*") || t.startsWith("/*")) "" else l
-    }
+    // comments stripped so scaladoc HISTORY of the old shape (which
+    // names collect_list and flatMap) can't false-positive
+    val lines = SourceGate.code(source)
     for {
       i <- lines.indices.toVector
       if lines(i).contains("collect_list")
@@ -42,11 +39,8 @@ class PairEmissionGateSpec extends AnyFunSuite {
   }
 
   test("no collect_list feeds a pair-emitting flatMap in query sources") {
-    val dir = new java.io.File("src/main/scala/graft/queries")
-    assert(dir.isDirectory, s"missing ${dir.getPath}")
-    val bad = dir.listFiles().filter(_.getName.endsWith(".scala")).toSeq.flatMap { f =>
-      val src = new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
-      scan(src).map { case (ln, m) => s"${f.getName}:$ln collect_list → $m" }
+    val bad = SourceGate.scalaFiles("src/main/scala/graft/queries").flatMap { case (name, src) =>
+      scan(src).map { case (ln, m) => s"$name:$ln collect_list → $m" }
     }
     assert(bad.isEmpty,
       s"whole-bucket posting-list pair emission is banned — migrate onto " +

@@ -1,7 +1,5 @@
 package graft
 
-import scala.jdk.CollectionConverters._
-
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Source-level gate, after the PairEmissionGateSpec precedent: every
@@ -17,21 +15,12 @@ class SessionBuilderGateSpec extends AnyFunSuite {
 
   private val builder = """SparkSession\s*\.\s*builder""".r
 
-  private[graft] def buildsSession(source: String): Boolean = {
-    val code = source.linesIterator.filterNot { l =>
-      val t = l.trim
-      t.startsWith("//") || t.startsWith("*") || t.startsWith("/*")
-    }.mkString("\n")
-    builder.findFirstIn(code).nonEmpty
-  }
+  private[graft] def buildsSession(source: String): Boolean =
+    builder.findFirstIn(SourceGate.code(source).mkString("\n")).nonEmpty
 
   test("SparkSession.builder appears under src/main only in GraftSession.scala") {
-    val root = java.nio.file.Paths.get("src/main")
-    assert(java.nio.file.Files.isDirectory(root), s"missing $root")
-    val builders = java.nio.file.Files.walk(root).iterator.asScala
-      .filter(_.toString.endsWith(".scala"))
-      .filter(p => buildsSession(new String(java.nio.file.Files.readAllBytes(p), "UTF-8")))
-      .map(_.getFileName.toString).toSeq.sorted
+    val builders = SourceGate.scalaFiles("src/main")
+      .collect { case (name, src) if buildsSession(src) => name }
     assert(builders == Seq("GraftSession.scala"),
       s"build the session with GraftSession.local instead: ${builders.mkString(", ")}")
   }
